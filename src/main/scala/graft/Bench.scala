@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): run every registered query against
   * `SPARK_GRAFT_SF_DIR`, force full materialization through the noop
   * sink (a bare count() would let Catalyst prune the projections we are
@@ -10,17 +8,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().min(32).toString)
-    // Shuffle partitions default to the core count (right for the
-    // sf0.1 bench tier) but are overridable: per-partition working
-    // sets grow linearly with the data at fixed partitioning, and the
-    // 100x probe showed the consequence (execution-memory exhaustion
-    // in the PageRank contribution aggregate at 32 partitions x 1.2B
-    // rows). Sizing partitions to the data, not the cores, is the
-    // standard first lever on a real cluster.
-    val shufflePartitions = sys.env.getOrElse(
-      "SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
+    val names = SparkEntry.selected()
+    val cpus = SparkEntry.cpus
+    val shufflePartitions = SparkEntry.shufflePartitions(sfDir, cpus)
     // Contention guard (VERDICT r10 #6): a loaded host uniformly
     // inflates every query ~1.2x with no plan change (seen rounds
     // 7/9/10) — numbers from such a run are not comparable to a floor.
@@ -60,72 +50,39 @@ object Bench {
       rs.map(_._1).min
     }
     val canarySec = canary()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session(cpus, shufflePartitions)
     // Stage the single-row-group testdata as splittable multi-file
     // parquet once (production input shape — see Tables.stage).
     val benchDir = Tables.stage(spark, sfDir)
-    // JIT/codegen warmup: run every query once at the smallest sf so the
-    // timed pass measures the steady-state plan, not first-run JVM/codegen
-    // compilation of each query's generated classes.
     // min-of-N per query: single-shot timings at sf0.1 vary ~40% run to
     // run (GC pauses, state-store/localCheckpoint churn from earlier
     // queries in the session) — round-over-round comparisons need the
-    // floor, not one sample. SPARK_GRAFT_ONLY=a,b narrows the set for
-    // local iteration.
+    // floor, not one sample.
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt.max(1)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val warmDir = "/root/testdata/sf0.001"
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (_, fn) =>
-        try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
-      }
-    // Quiesce between warmup and the timed pass (guide §1 "measure the
-    // computation"): the 369-query warmup leaves thousands of dead
-    // shuffle/broadcast/localCheckpoint references that the
-    // ContextCleaner only discovers at the FIRST major GC — which,
-    // un-quiesced, lands minutes into the timed pass and inflates
-    // whichever (alphabetically adjacent) queries it lands on by
-    // 5-30 s (three baseline runs each showed 2-3 such spikes on
-    // queries whose solo min-of-3 is 0.3-0.7 s). Force the collection
-    // NOW and give the cleaner thread a bounded drain window so the
-    // storm is spent before the first timed query. Same queries, same
-    // noop sink, same min-of-N — this only moves unrelated JVM
-    // housekeeping out of the measured region.
-    (1 to 3).foreach { _ => System.gc(); Thread.sleep(1500) }
+    SparkEntry.warmUp(spark, names)
     // A query whose rep throws must record "err", NEVER a number: r7's
     // loader break made 102 queries fail-fast in ~50 ms each, and the old
     // code posted those as min-of-3 "times" — a bench that improves
     // because the code stopped running is a benchmark-integrity bug.
     val results: Seq[(String, Either[String, Double])] =
-      SparkEntry.queries.toSeq.sortBy(_._1)
-        .filter { case (name, _) => only.forall(_.contains(name)) }
-        .map { case (name, fn) =>
-          val times = (1 to reps).map { _ =>
-            val t0 = System.nanoTime()
-            try {
-              fn(spark, benchDir).write.format("noop").mode("overwrite").save()
-              Right((System.nanoTime() - t0) / 1e9)
-            } catch { case e: Throwable =>
-              System.err.println(s"[bench] $name failed: ${e.getMessage}")
-              Left(Option(e.getMessage).getOrElse(e.getClass.getName))
-            }
+      names.map { name =>
+        val times = (1 to reps).map { _ =>
+          val t0 = System.nanoTime()
+          try {
+            SparkEntry.queries(name)(spark, benchDir)
+              .write.format("noop").mode("overwrite").save()
+            Right((System.nanoTime() - t0) / 1e9)
+          } catch { case e: Throwable =>
+            System.err.println(s"[bench] $name failed: ${e.getMessage}")
+            Left(Option(e.getMessage).getOrElse(e.getClass.getName))
           }
-          val ok = times.collect { case Right(t) => t }
-          // any failed rep poisons the query: partial timings are not
-          // comparable to full min-of-N
-          name -> (if (ok.size == reps) Right(ok.min)
-                   else Left(times.collectFirst { case Left(m) => m }.get))
         }
+        val ok = times.collect { case Right(t) => t }
+        // any failed rep poisons the query: partial timings are not
+        // comparable to full min-of-N
+        name -> (if (ok.size == reps) Right(ok.min)
+                 else Left(times.collectFirst { case Left(m) => m }.get))
+      }
     // Per-query values printed at ms precision (3 decimals): the full
     // 9-decimal line (~12 KB at 369 queries) overflowed the driver's
     // stdout-tail capture two rounds running (BENCH_r16 parsed:null →
@@ -157,7 +114,7 @@ object Bench {
       .getOrElse(0.0625 * Runtime.getRuntime.availableProcessors())
     val contended = loadBefore > loadThr
     val line =
-      s"""{"metric":"total","value":${ms(total)},"unit":"sec","failed":${failedNames.size},"load_before":$loadBefore,"load_after":$loadAfter,"contended":$contended,"canary_sec":${ms(canarySec)},"cpus":${cpus.toInt},"shuffle_partitions":${shufflePartitions.toInt},"queries":$qs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${ms(total)},"unit":"sec","failed":${failedNames.size},"load_before":$loadBefore,"load_after":$loadAfter,"contended":$contended,"canary_sec":${ms(canarySec)},"cpus":$cpus,"shuffle_partitions":$shufflePartitions,"queries":$qs,"sf":"$sfDir"}"""
     if (contended)
       System.err.println(
         s"[bench] WARNING: started at loadavg $loadBefore (>$loadThr) — timings " +

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{AvroCodec, VectorOps}
+import graft.functions.AvroCodec
 
 /** Session-extension entry point: makes every graft custom expression a
   * first-class SQL function in any session built with
@@ -39,14 +39,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       info("avro_decode_envelope",
         "avro_decode_envelope(binary) - Avro binary to trade envelope"),
       (exprs: Seq[Expression]) => AvroCodec.DecodeEnvelope(exprs.head)))
-  }
-}
-
-object GraftExtensions {
-  /** Keep the imperative registrars reachable from the extension object
-    * for sessions that already exist (tests, the driver's session). */
-  def registerAll(spark: org.apache.spark.sql.SparkSession): Unit = {
-    VectorOps.register(spark)
-    AvroCodec.register(spark)
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-shape audit main (VERDICT r15 directive #6): for every
   * registered query, build the DataFrame at a small sf and record the
   * COUNTS of structural physical-plan nodes (exchanges, joins, sorts,
@@ -35,37 +33,28 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outPath = args.lift(1).getOrElse("PLAN_SHAPE.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val rows = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) =>
-        val shape: Either[String, Seq[(String, Int)]] =
-          try {
-            val plan = fn(spark, sfDir).queryExecution.executedPlan
-            val counts = scala.collection.mutable.Map.empty[String, Int]
-            plan.foreach { n =>
-              val c = n.getClass.getSimpleName.stripSuffix("Exec")
-              if (interesting.exists(c.contains))
-                counts.update(c, counts.getOrElse(c, 0) + 1)
-            }
-            Right(counts.toSeq.sortBy(_._1))
-          } catch {
-            case e: Throwable =>
-              System.err.println(s"[plan] $name failed: ${e.getMessage}")
-              Left(Option(e.getMessage).getOrElse(e.getClass.getName))
+    val names = SparkEntry.selected()
+    val spark = SparkEntry.session(SparkEntry.cpus, shufflePartitions = 32,
+      adaptive = false)
+    val rows = names.map { name =>
+      val shape: Either[String, Seq[(String, Int)]] =
+        try {
+          val plan = SparkEntry.queries(name)(spark, sfDir)
+            .queryExecution.executedPlan
+          val counts = scala.collection.mutable.Map.empty[String, Int]
+          plan.foreach { n =>
+            val c = n.getClass.getSimpleName.stripSuffix("Exec")
+            if (interesting.exists(c.contains))
+              counts.update(c, counts.getOrElse(c, 0) + 1)
           }
-        name -> shape
-      }
+          Right(counts.toSeq.sortBy(_._1))
+        } catch {
+          case e: Throwable =>
+            System.err.println(s"[plan] $name failed: ${e.getMessage}")
+            Left(Option(e.getMessage).getOrElse(e.getClass.getName))
+        }
+      name -> shape
+    }
     val body = rows.map {
       case (name, Right(counts)) =>
         val inner = counts.map { case (c, n) => "\"" + c + "\":" + n }

@@ -22,584 +22,6 @@ object SparkEntry {
   private def trades(s: SparkSession, dir: String): DataFrame =
     Tables.trades(s, dir)
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // -- ingest / projection tier (P1-P9) --------------------------------
-    "p1_decode_roundtrip" -> ((s, dir) => Decode.roundTrip(trades(s, dir))),
-    "p1b_avro_roundtrip" -> ((s, dir) => Decode.avroRoundTrip(s, trades(s, dir))),
-    // -- aggregation tier (A1-A6, T3-T4) ---------------------------------
-    "a1_tumbling_volume" -> ((s, dir) => TradeOps.tumblingVolume(trades(s, dir))),
-    "a2_sliding_features" -> ((s, dir) => TradeOps.slidingFeatures(trades(s, dir))),
-    // -- window-function tier (W1-W3, A7) --------------------------------
-    "w1_cumulative_volume" -> ((s, dir) => TradeOps.cumulativeVolume(trades(s, dir))),
-    "w2_lookback_avg" -> ((s, dir) => TradeOps.lookbackAvg(trades(s, dir))),
-    "w2b_lookback_matrix" -> ((s, dir) => Predict.lookbackMatrixDigest(trades(s, dir))),
-    "k7_predict_writeback" -> ((s, dir) => Predict.predictWriteback(s, trades(s, dir), dir)),
-    "w3_resample_interpolate" -> ((s, dir) => Resample.interpolateHourly(trades(s, dir))),
-    // -- scalar/derivation tier (F2, F3, F9) -----------------------------
-    "f9_minmax_scale" -> ((s, dir) => TradeOps.minMaxScale(trades(s, dir))),
-    "f3_dateparts" -> ((s, dir) => TradeOps.dateParts(trades(s, dir))),
-    "f2_json_kv" -> ((s, dir) => TradeOps.jsonKeyValue(trades(s, dir))),
-    // -- profiling / time-conversion tier (A8, A9, F5-F7, O5, S5/K8) -----
-    "a8_null_profile" -> ((s, dir) => TradeOps.nullProfile(Tables.load(s, dir, "lineitem"))),
-    "a9_time_bounds" -> ((s, dir) => TradeOps.timeBounds(trades(s, dir))),
-    "a10_quantiles" -> ((s, dir) => TradeOps.discreteQuantiles(trades(s, dir))),
-    "a10b_approx_quantiles" -> ((s, dir) => TradeOps.approxQuantilesChecked(trades(s, dir))),
-    "o5_union_append" -> ((s, dir) => TradeOps.unionAppend(trades(s, dir))),
-    "o6_set_ops" -> ((s, dir) => TradeOps.setOps(trades(s, dir))),
-    "j_full_outer_daily" -> ((s, dir) => TradeOps.fullOuterDaily(trades(s, dir))),
-    "a_grouping_sets" -> ((s, dir) => Relational.groupingSetsSummary(s, dir)),
-    "t_normalize" -> ((s, dir) => TextOps.normalize(Tables.load(s, dir, "documents"))),
-    "t_stratified_sample" -> ((s, dir) => TextOps.stratifiedSample(Tables.load(s, dir, "documents"))),
-    "t_pack_sequences" -> ((s, dir) => TextOps.packSequences(Tables.load(s, dir, "documents"))),
-    "t_source_mix" -> ((s, dir) => TextOps.sourceMixSample(Tables.load(s, dir, "documents"))),
-    "v_quantize_int8" -> ((s, dir) => Similarity.quantizeInt8(s, dir)),
-    "f5_time_convert" -> ((s, dir) => TradeOps.timeConvert(trades(s, dir))),
-    "s5_csv_roundtrip" -> ((s, dir) => TradeOps.csvRoundTrip(s, trades(s, dir))),
-    "s11_orc_roundtrip" -> ((s, dir) => TradeOps.orcRoundTrip(s, trades(s, dir))),
-    "s8_json_roundtrip" -> ((s, dir) => TradeOps.jsonRoundTrip(s, trades(s, dir))),
-    "k4_partitioned_roundtrip" -> ((s, dir) => TradeOps.partitionedRoundTrip(s, trades(s, dir))),
-    // -- serving tier (S6, O1, O2, O4) -----------------------------------
-    "s6_serving_range" -> ((s, dir) =>
-      TradeOps.servingRange(trades(s, dir), "click", "2024-01-05 00:00:00", "2024-01-20 00:00:00")),
-    "s7_keyed_point_read" -> ((s, dir) =>
-      TradeOps.keyedPointRead(s, trades(s, dir), dir, "click", "2024-01-05 00:00:00", "2024-01-20 00:00:00")),
-    "s9_time_travel" -> ((s, dir) => TradeOps.timeTravelRead(s, trades(s, dir), dir)),
-    "s10_version_diff" -> ((s, dir) => TradeOps.versionDiff(s, trades(s, dir), dir)),
-    "w4_analytic_funcs" -> ((s, dir) => TradeOps.analyticWindows(trades(s, dir))),
-    "w5_ewma" -> ((s, dir) => TradeOps.ewma(trades(s, dir))),
-    "w6_rolling_median" -> ((s, dir) => TradeOps.rollingMedian(trades(s, dir))),
-    "a11_price_histogram" -> ((s, dir) => TradeOps.priceHistogram(trades(s, dir))),
-    "t_bigram_topk" -> ((s, dir) => TextOps.bigramTopK(Tables.load(s, dir, "documents"))),
-    "o2_last_row" -> ((s, dir) => TradeOps.lastRow(trades(s, dir))),
-    "o4_ordered_split" -> ((s, dir) => TradeOps.orderedSplit(trades(s, dir))),
-    // -- joins (§2.6; as-of per predict_btc.py:88-91) --------------------
-    "j_asof_click" -> ((s, dir) => {
-      val t = trades(s, dir)
-      val purchases = t.filter(col("symbol") === "purchase")
-        .select("event_id", "user_id", "timestamp", "price")
-      val clicks = t.filter(col("symbol") === "click")
-        .groupBy("user_id", "timestamp")
-        .agg(max_by(col("price"), col("event_id")).as("click_price"))
-      AsOfJoin.asOf(purchases, clicks, "user_id", "timestamp",
-        "click_price", "click_price")
-    }),
-    "j_asof_nearest" -> ((s, dir) => {
-      val t = trades(s, dir)
-      val purchases = t.filter(col("symbol") === "purchase")
-        .select("event_id", "user_id", "timestamp", "price")
-      val clicks = t.filter(col("symbol") === "click")
-        .groupBy("user_id", "timestamp")
-        .agg(max_by(col("price"), col("event_id")).as("click_price"))
-      AsOfJoin.asOfNearest(purchases, clicks, "user_id", "timestamp",
-        "click_price", "near_price")
-    }),
-    "j_asof_tolerance" -> ((s, dir) => {
-      val t = trades(s, dir)
-      val purchases = t.filter(col("symbol") === "purchase")
-        .select("event_id", "user_id", "timestamp", "price")
-      val clicks = t.filter(col("symbol") === "click")
-        .groupBy("user_id", "timestamp")
-        .agg(max_by(col("price"), col("event_id")).as("click_price"))
-      AsOfJoin.asOfTolerance(purchases, clicks, "user_id", "timestamp",
-        "click_price", "tol_price", toleranceMs = 60000L)
-    }),
-    "j_semi_customers_with_orders" -> ((s, dir) => Relational.customersWithOrders(s, dir)),
-    "j_anti_customers_without_orders" -> ((s, dir) => Relational.customersWithoutOrders(s, dir)),
-    // -- relational breadth ----------------------------------------------
-    "q1_pricing_summary" -> ((s, dir) => Relational.pricingSummary(s, dir)),
-    "q3_shipping_priority" -> ((s, dir) => Relational.shippingPriority(s, dir)),
-    "q5_revenue_by_nation" -> ((s, dir) => Relational.localSupplierVolume(s, dir)),
-    "q10_returned_revenue" -> ((s, dir) => Relational.returnedItemRevenue(s, dir)),
-    "q17_small_qty_revenue" -> ((s, dir) => Relational.smallQuantityRevenue(s, dir)),
-    "q7_volume_shipping" -> ((s, dir) => Relational.volumeShipping(s, dir)),
-    "q8_market_share" -> ((s, dir) => Relational.marketShare(s, dir)),
-    "q9_product_profit" -> ((s, dir) => Relational.productProfit(s, dir)),
-    "q12_priority_lines" -> ((s, dir) => Relational.priorityLineCounts(s, dir)),
-    "q13_order_distribution" -> ((s, dir) => Relational.customerOrderDistribution(s, dir)),
-    "q14_promo_share" -> ((s, dir) => Relational.promoRevenueShare(s, dir)),
-    "q15_top_supplier" -> ((s, dir) => Relational.topSupplier(s, dir)),
-    "q18_large_volume" -> ((s, dir) => Relational.largeVolumeOrders(s, dir)),
-    "q19_branded_revenue" -> ((s, dir) => Relational.brandedRevenue(s, dir)),
-    "q21_sole_returning_supplier" -> ((s, dir) => Relational.soleReturningSupplier(s, dir)),
-    "q22_idle_balance" -> ((s, dir) => Relational.idleCustomerBalance(s, dir)),
-    "q2_min_cost_supplier" -> ((s, dir) => Relational.minCostSupplier(s, dir)),
-    "q11_important_stock" -> ((s, dir) => Relational.importantStockValue(s, dir)),
-    "q16_supplier_count" -> ((s, dir) => Relational.supplierCountByPart(s, dir)),
-    "q20_excess_stock" -> ((s, dir) => Relational.excessStockSuppliers(s, dir)),
-    "a_distinct_counts" -> ((s, dir) => Relational.distinctCounts(s, dir)),
-    "a_approx_distinct" -> ((s, dir) => Relational.approxDistinctChecked(s, dir)),
-    "w_order_ranks" -> ((s, dir) => Relational.orderRanks(s, dir)),
-    "a_rollup_summary" -> ((s, dir) => Relational.rollupSummary(s, dir)),
-    "a_cube_summary" -> ((s, dir) => Relational.cubeSummary(s, dir)),
-    "j_range_binned" -> ((s, dir) => {
-      val t = trades(s, dir)
-      val purchases = t.filter(col("symbol") === "purchase")
-        .select("event_id", "user_id", "timestamp", "price")
-      val clicks = t.filter(col("symbol") === "click")
-        .select("user_id", "timestamp")
-      AsOfJoin.rangeCountJoin(purchases, clicks, "user_id", "timestamp",
-        windowSec = 3600L, binSec = 900L)
-    }),
-    // -- scale-technique tier (T15, skew, co-located joins) --------------
-    "t15_session_windows" -> ((s, dir) => Scale.sessionize(trades(s, dir))),
-    "skew_salted_agg" -> ((s, dir) => Scale.saltedVolumeBySymbol(trades(s, dir))),
-    "b_bucketed_join" -> ((s, dir) => Scale.bucketedOrderRevenue(s, dir)),
-    "k9_zorder_roundtrip" -> ((s, dir) => Scale.zorderRoundTrip(s, trades(s, dir))),
-    // -- training-data pipeline tier (SURVEY.md §7.5) --------------------
-    "t_token_stats" -> ((s, dir) => TextOps.tokenStats(Tables.load(s, dir, "documents"))),
-    "t_lang_id" -> ((s, dir) => TextOps.langId(Tables.load(s, dir, "documents"))),
-    "t_quality_score" -> ((s, dir) => TextOps.qualityScore(Tables.load(s, dir, "documents"))),
-    "t_fingerprint" -> ((s, dir) => TextOps.fingerprint(Tables.load(s, dir, "documents"))),
-    "t_repetition" -> ((s, dir) => TextOps.repetitionStats(Tables.load(s, dir, "documents"))),
-    "t_chunking" -> ((s, dir) => TextOps.chunkDocs(Tables.load(s, dir, "documents"))),
-    "t_pii_redact" -> ((s, dir) => TextOps.piiRedact(Tables.load(s, dir, "documents"))),
-    "t_vocab_topk" -> ((s, dir) => TextOps.vocabTopK(Tables.load(s, dir, "documents"))),
-    "t_freq_spectrum" -> ((s, dir) => TextOps.freqSpectrum(Tables.load(s, dir, "documents"))),
-    "t_df_rarity" -> ((s, dir) => TextOps.dfRarity(Tables.load(s, dir, "documents"))),
-    "t_bpe_train" -> ((s, dir) => TextOps.bpeTrain(Tables.load(s, dir, "documents"))),
-    "t_bpe_encode" -> ((s, dir) => TextOps.bpeEncode(Tables.load(s, dir, "documents"))),
-    "t_domain_quota" -> ((s, dir) => TextOps.domainQuota(Tables.load(s, dir, "documents"))),
-    "d_cluster_best" -> ((s, dir) => Dedup.clusterBest(Tables.load(s, dir, "documents"))),
-    "t_tfidf_topk" -> ((s, dir) => TextOps.tfidfTopK(Tables.load(s, dir, "documents"))),
-    "k10_compaction" -> ((s, dir) => TradeOps.compactRoundTrip(s, trades(s, dir))),
-    "q4_returned_priority" -> ((s, dir) => Relational.returnedPriorityOrders(s, dir)),
-    "q6_forecast_revenue" -> ((s, dir) => Relational.forecastRevenue(s, dir)),
-    "d_contamination" -> ((s, dir) => TextOps.contamination(Tables.load(s, dir, "documents"))),
-    "d_exact_dedup" -> ((s, dir) => Dedup.exactDedup(Tables.load(s, dir, "documents"))),
-    "d_minhash_sig" -> ((s, dir) => Dedup.minhashSignatures(Tables.load(s, dir, "documents"))),
-    "d_minhash_pairs" -> ((s, dir) => Dedup.minhashPairs(Tables.load(s, dir, "documents"))),
-    "d_threshold_curve" -> ((s, dir) => Dedup.thresholdCurve(Tables.load(s, dir, "documents"))),
-    "d_band_tuning" -> ((s, dir) => Dedup.bandTuning(Tables.load(s, dir, "documents"))),
-    "g_modularity" -> ((s, dir) => Dedup.modularity(
-      Tables.load(s, dir, "documents"), edgeBudget = 2000000L)),
-    "d_dup_by_source" -> ((s, dir) => Dedup.dupBySource(Tables.load(s, dir, "documents"))),
-    "d_simhash_sig" -> ((s, dir) => Dedup.simhashSignatures(Tables.load(s, dir, "documents"))),
-    "d_simhash_pairs" -> ((s, dir) => Dedup.simhashPairs(Tables.load(s, dir, "documents"))),
-    "d_ngram_jaccard" -> ((s, dir) => Dedup.ngramJaccard(Tables.load(s, dir, "documents"))),
-    "d_embedding_dup" -> ((s, dir) => Dedup.embeddingDup(s, dir)),
-    "d_cos_threshold_curve" -> ((s, dir) => Dedup.cosThresholdCurve(s, dir)),
-    "d_segment_dedup" -> ((s, dir) => TextOps.segmentDedup(Tables.load(s, dir, "documents"))),
-    "d_semantic_dup" -> ((s, dir) => Similarity.semanticDup(s, dir)),
-    "d_dedup_resolve" -> ((s, dir) => Dedup.resolveDuplicates(Tables.load(s, dir, "documents"))),
-    "g_pagerank" -> ((s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      // dupEdges is session-checkpointed; skip pageRank's duplicate pin
-      Graph.pageRank(docs.select("doc_id"), Dedup.dupEdges(docs),
-        assumeMaterialized = true)
-    }),
-    "g_contamination_hops" -> ((s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      Graph.hopDistance(
-        docs.select("doc_id"),
-        Dedup.dupEdges(docs),
-        TextOps.contamination(docs)
-          .filter(col("contaminated") === 1).select("doc_id"),
-        // dupEdges is session-checkpointed; skip the duplicate pin
-        assumeMaterialized = true)
-    }),
-    "mv_incremental" -> ((s, dir) => Incremental.incrementalAgg(Tables.events(s, dir))),
-    "e_funnel" -> ((s, dir) => EventAnalytics.funnel(Tables.events(s, dir))),
-    "e_retention" -> ((s, dir) => EventAnalytics.retention(Tables.events(s, dir))),
-    "e_transitions" -> ((s, dir) => EventAnalytics.transitionMatrix(Tables.events(s, dir))),
-    "mv_incremental_distinct" -> ((s, dir) => Incremental.incrementalDistinct(Tables.events(s, dir))),
-    "mv_join_incremental" -> ((s, dir) => Incremental.incrementalJoinAgg(
-      Tables.load(s, dir, "orders"), Tables.load(s, dir, "customer"))),
-    "mv_minmax_retract" -> ((s, dir) =>
-      Incremental.retractableMinMax(Tables.events(s, dir))),
-    "mv_median_retract" -> ((s, dir) =>
-      Incremental.retractableMedian(Tables.events(s, dir))),
-    "mv_topk_retract" -> ((s, dir) =>
-      Incremental.retractableTopK(Tables.events(s, dir))),
-    "t_importance_weights" -> ((s, dir) =>
-      TextOps.importanceWeights(Tables.load(s, dir, "documents"))),
-    "t_ngram_novelty" -> ((s, dir) =>
-      TextOps.ngramNovelty(Tables.load(s, dir, "documents"))),
-    "p_token_budget" -> ((s, dir) =>
-      Pipeline.tokenBudgetSelect(Tables.load(s, dir, "documents"))),
-    "p_mixture_epochs" -> ((s, dir) =>
-      Pipeline.mixtureEpochs(Tables.load(s, dir, "documents"))),
-    "p_dup_quality_profile" -> ((s, dir) =>
-      Pipeline.dupQualityProfile(Tables.load(s, dir, "documents"))),
-    "p_anneal_schedule" -> ((s, dir) =>
-      Pipeline.annealSchedule(Tables.load(s, dir, "documents"))),
-    "p_dedup_savings" -> ((s, dir) =>
-      Pipeline.dedupSavings(Tables.load(s, dir, "documents"))),
-    "t_langid_confusion" -> ((s, dir) =>
-      TextOps.langIdConfusion(Tables.load(s, dir, "documents"))),
-    "t_bpe_fertility" -> ((s, dir) =>
-      TextOps.bpeFertility(Tables.load(s, dir, "documents"))),
-    "w7_gap_detect" -> ((s, dir) => TradeOps.gapDetect(trades(s, dir))),
-    "p_corpus_clean" -> ((s, dir) => Pipeline.corpusClean(Tables.load(s, dir, "documents"))),
-    "p_leakage_split" -> ((s, dir) => Pipeline.leakageSafeSplit(Tables.load(s, dir, "documents"))),
-    "p_pretrain_manifest" -> ((s, dir) => Pipeline.pretrainManifest(Tables.load(s, dir, "documents"))),
-    "p_curation_manifest" -> ((s, dir) => Pipeline.curationManifest(Tables.load(s, dir, "documents"))),
-    "p2_dead_letter" -> ((s, dir) => graft.ingest.Decode.deadLetterDecode(trades(s, dir))),
-    "a_hll_merge" -> ((s, dir) => Relational.hllMergeDistinct(s, dir)),
-    "a28_hll_intersect" -> ((s, dir) => Relational.hllIntersect(s, dir)),
-    "a27_cms_topk" -> ((s, dir) => Relational.cmsTopK(s, dir)),
-    "v_cosine_topk" -> ((s, dir) => Similarity.cosineTopK(s, dir)),
-    "v_hard_negatives" -> ((s, dir) => Similarity.hardNegatives(s, dir)),
-    "v_ann_lsh" -> ((s, dir) => Similarity.annLsh(s, dir)),
-    "v_lsh_ann_recall" -> ((s, dir) => Similarity.lshAnnRecall(s, dir)),
-    "v_ann_multiprobe" -> ((s, dir) => Similarity.annLshMultiprobe(s, dir)),
-    "v_multiprobe_recall" -> ((s, dir) => Similarity.multiprobeRecall(s, dir)),
-    "v_label_outliers" -> ((s, dir) => Similarity.labelOutliers(s, dir)),
-    "v_centroid_shift" -> ((s, dir) => Similarity.centroidShift(s, dir)),
-    "v_ann_ivf" -> ((s, dir) => Similarity.annIvf(s, dir)),
-    "v_ivf_recall" -> ((s, dir) => Similarity.ivfRecall(s, dir)),
-    "v_mrl_recall" -> ((s, dir) => Similarity.mrlRecall(s, dir)),
-    "v_int8_recall" -> ((s, dir) => Similarity.int8Recall(s, dir)),
-    "v_hamming_topk" -> ((s, dir) => Similarity.hammingTopK(s, dir)),
-    "v_dim_profile" -> ((s, dir) => Similarity.dimProfile(s, dir)),
-    "v_knn_graph" -> ((s, dir) => Similarity.knnGraph(s, dir)),
-    "v_diversity_sample" -> ((s, dir) => Similarity.diversitySample(s, dir)),
-    "p_dedup_cascade" -> ((s, dir) =>
-      Pipeline.dedupCascade(Tables.load(s, dir, "documents"))),
-    "w_vwma" -> ((s, dir) => TradeOps.vwma(trades(s, dir))),
-    "a_gini" -> ((s, dir) => TradeOps.giniActivity(trades(s, dir))),
-    "v_pca_power" -> ((s, dir) => Similarity.pcaPower(s, dir)),
-    "v_ood_topk" -> ((s, dir) => Similarity.oodTopK(s, dir)),
-    "m_payload_dedup" -> ((s, dir) =>
-      Multimodal.payloadDedup(Tables.load(s, dir, "documents"))),
-    "p_corpus_map" -> ((s, dir) =>
-      Pipeline.corpusMap(Tables.load(s, dir, "documents"))),
-    "a_runs_test" -> ((s, dir) => TradeOps.runsTest(trades(s, dir))),
-    "d_edit_distance" -> ((s, dir) =>
-      Dedup.editDistance(Tables.load(s, dir, "documents"))),
-    "v_cluster_radius" -> ((s, dir) => Similarity.clusterRadius(s, dir)),
-    "v_norm_hist" -> ((s, dir) => Similarity.normHist(s, dir)),
-    "d_prefix_dup" -> ((s, dir) =>
-      Dedup.prefixDup(Tables.load(s, dir, "documents"))),
-    "t_charclass_profile" -> ((s, dir) =>
-      TextOps.charClassProfile(Tables.load(s, dir, "documents"))),
-    "g_assortativity" -> ((s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      // fifth consumer of the cached mutual-kNN similarity graph
-      Graph.assortativity(Dedup.mutualKnn(
-        Dedup.weightedDupEdges(docs, Dedup.triangleThreshold)))
-    }),
-    "k16_partition_evolution" -> ((s, dir) =>
-      TradeOps.partitionEvolution(s, trades(s, dir))),
-    "t_length_outliers" -> ((s, dir) =>
-      TextOps.lengthOutliers(Tables.load(s, dir, "documents"))),
-    "d_minhash_est_error" -> ((s, dir) =>
-      Dedup.minhashEstError(Tables.load(s, dir, "documents"))),
-    "v_knn_graph_recall" -> ((s, dir) => Similarity.knnGraphRecall(s, dir)),
-    "w_ichimoku" -> ((s, dir) => TradeOps.ichimoku(trades(s, dir))),
-    "p_shard_plan" -> ((s, dir) =>
-      Pipeline.shardPlan(Tables.load(s, dir, "documents"))),
-    "v_hamming_recall" -> ((s, dir) => Similarity.hammingRecall(s, dir)),
-    "w_aroon" -> ((s, dir) => TradeOps.aroon(trades(s, dir))),
-    "e_burst_detect" -> ((s, dir) =>
-      EventAnalytics.burstDetect(Tables.events(s, dir))),
-    "g_clustering_coeff" -> ((s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      // fourth consumer of the cached mutual-kNN similarity graph
-      Graph.localClustering(Dedup.mutualKnn(
-        Dedup.weightedDupEdges(docs, Dedup.triangleThreshold)))
-    }),
-    "v_recall_curve" -> ((s, dir) => Similarity.ivfRecallCurve(s, dir)),
-    "v_pq_codes" -> ((s, dir) => Similarity.pqCodes(s, dir)),
-    "v_pq_adc" -> ((s, dir) => Similarity.pqAdc(s, dir)),
-    "v_ivfpq_adc" -> ((s, dir) => Similarity.ivfPqAdc(s, dir)),
-    "v_kmeans" -> ((s, dir) => Similarity.kmeansCentroids(s, dir)),
-    "m_binary_meta" -> ((s, dir) => Multimodal.binaryMeta(Tables.load(s, dir, "documents"))),
-    "m_decode_stub" -> ((s, dir) => Multimodal.decodeMedia(s, Tables.load(s, dir, "documents")).toDF()),
-    "m_frame_sample" -> ((s, dir) => Multimodal.frameSample(Tables.load(s, dir, "documents"))),
-    "m_resize_stub" -> ((s, dir) => Multimodal.resizeStub(Tables.load(s, dir, "documents"))),
-    "m_batch_extract" -> ((s, dir) => Multimodal.extractBatched(s, Tables.load(s, dir, "documents")).toDF()),
-    "a_pivot_dow" -> ((s, dir) => TradeOps.pivotDayOfWeek(trades(s, dir))),
-    "a_unpivot_totals" -> ((s, dir) => TradeOps.unpivotTotals(trades(s, dir))),
-    // -- technical-indicator tier (W8-W10, A12-A13) ----------------------
-    "w8_bollinger" -> ((s, dir) => TradeOps.bollinger(trades(s, dir))),
-    "w9_rsi" -> ((s, dir) => TradeOps.rsi(trades(s, dir))),
-    "w10_drawdown" -> ((s, dir) => TradeOps.drawdown(trades(s, dir))),
-    "a12_pairwise_corr" -> ((s, dir) => TradeOps.pairwiseCorr(trades(s, dir))),
-    "a13_vwap" -> ((s, dir) => TradeOps.vwap(trades(s, dir))),
-    // -- fingerprint/coverage additions ----------------------------------
-    "t_winnow" -> ((s, dir) => TextOps.winnow(Tables.load(s, dir, "documents"))),
-    "d_substring_dup" -> ((s, dir) => TextOps.substringDup(Tables.load(s, dir, "documents"))),
-    "t_lm_coverage" -> ((s, dir) => TextOps.lmCoverage(Tables.load(s, dir, "documents"))),
-    "e_cooccurrence" -> ((s, dir) => EventAnalytics.cooccurrence(Tables.events(s, dir))),
-    "w11_obv" -> ((s, dir) => TradeOps.obv(trades(s, dir))),
-    "f12_winsorize" -> ((s, dir) => TradeOps.winsorize(trades(s, dir))),
-    "t_boilerplate" -> ((s, dir) => TextOps.boilerplateStrip(Tables.load(s, dir, "documents"))),
-    "w12_stochastic" -> ((s, dir) => TradeOps.stochasticK(trades(s, dir))),
-    "a14_atr" -> ((s, dir) => TradeOps.atr(trades(s, dir))),
-    "a15_anomaly" -> ((s, dir) => TradeOps.anomalyFlags(trades(s, dir))),
-    "g_triangles" -> ((s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      // session-cached weighted edge table: repeat invocations (and any
-      // other consumer at this threshold) skip the band join
-      Graph.triangles(Dedup.mutualKnn(
-        Dedup.weightedDupEdges(docs, Dedup.triangleThreshold)))
-    }),
-    "g_link_pred" -> ((s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      // same session-cached weighted edges + mutual-kNN graph as
-      // g_triangles — the band join runs once for both consumers
-      Graph.linkPrediction(Dedup.mutualKnn(
-        Dedup.weightedDupEdges(docs, Dedup.triangleThreshold)))
-    }),
-    "g_labelprop" -> ((s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      // third consumer of the cached mutual-kNN similarity graph
-      Graph.labelPropagation(Dedup.mutualKnn(
-        Dedup.weightedDupEdges(docs, Dedup.triangleThreshold)))
-    }),
-    "skew_salted_join" -> ((s, dir) => Scale.saltedSkewJoin(trades(s, dir))),
-    "d_fuzzy_pairs" -> ((s, dir) => Dedup.fuzzyPairs(Tables.load(s, dir, "documents"))),
-    "w13_cusum" -> ((s, dir) => TradeOps.cusum(trades(s, dir))),
-    "a16_profile" -> ((s, dir) => TradeOps.columnProfile(Tables.load(s, dir, "lineitem"))),
-    "a17_beta" -> ((s, dir) => TradeOps.marketBeta(trades(s, dir))),
-    "w14_macd" -> ((s, dir) => TradeOps.macd(trades(s, dir))),
-    "a18_mode" -> ((s, dir) => TradeOps.modalPrice(trades(s, dir))),
-    "t_code_detect" -> ((s, dir) => TextOps.codeDetect(Tables.load(s, dir, "documents"))),
-    "s12_gzip_roundtrip" -> ((s, dir) => TradeOps.gzipJsonRoundTrip(s, trades(s, dir))),
-    "a19_robust" -> ((s, dir) => TradeOps.robustStats(trades(s, dir))),
-    "a29_weighted_median" -> ((s, dir) => TradeOps.weightedMedian(trades(s, dir))),
-    "a16b_profile_sketch" -> ((s, dir) => TradeOps.columnProfileSketch(Tables.load(s, dir, "lineitem"))),
-    "s13_keyset_page" -> ((s, dir) =>
-      TradeOps.keysetPage(trades(s, dir), "2024-01-15 00:00:00", 0L)),
-    "j_asof_forward" -> ((s, dir) => {
-      val t = trades(s, dir)
-      val purchases = t.filter(col("symbol") === "purchase")
-        .select("event_id", "user_id", "timestamp", "price")
-      val clicks = t.filter(col("symbol") === "click")
-        .groupBy("user_id", "timestamp")
-        .agg(max_by(col("price"), col("event_id")).as("next_click_price"))
-      AsOfJoin.asOfForward(purchases, clicks, "user_id", "timestamp",
-        "next_click_price", "next_click_price")
-    }),
-    "w15_interval_merge" -> ((s, dir) => TradeOps.mergeIntervals(trades(s, dir))),
-    "a20_equidepth" -> ((s, dir) => TradeOps.equiDepthHistogram(trades(s, dir))),
-    "o7_walk_forward" -> ((s, dir) => TradeOps.walkForwardSplits(trades(s, dir))),
-    "f13_delta_encode" -> ((s, dir) => TradeOps.deltaEncode(trades(s, dir))),
-    "e_attribution" -> ((s, dir) =>
-      EventAnalytics.lastTouchAttribution(Tables.events(s, dir))),
-    "b_bloom_join" -> ((s, dir) => Relational.bloomSemiJoinRevenue(s, dir)),
-    "k11_scd2" -> ((s, dir) => TradeOps.scd2Build(trades(s, dir))),
-    "o8_kfold" -> ((s, dir) => TradeOps.kfoldAssign(trades(s, dir))),
-    "f14_zscore" -> ((s, dir) => TradeOps.zscoreScale(trades(s, dir))),
-    "s14_schema_evolution" -> ((s, dir) =>
-      TradeOps.schemaEvolutionRead(s, trades(s, dir))),
-    "mv_retract" -> ((s, dir) =>
-      Incremental.incrementalRetract(Tables.events(s, dir))),
-    "e_rfm" -> ((s, dir) => Relational.rfmSegments(s, dir)),
-    "a21_yoy_revenue" -> ((s, dir) => Relational.yoyRevenue(s, dir)),
-    "k12_cdc_apply" -> ((s, dir) => Incremental.cdcApply(trades(s, dir))),
-    "v_range_search" -> ((s, dir) => Similarity.rangeSearch(s, dir)),
-    "v_kcenter_seeds" -> ((s, dir) => Similarity.kcenterSeeds(s, dir)),
-    "d_containment" -> ((s, dir) => Dedup.containment(Tables.load(s, dir, "documents"))),
-    "d_lsh_recall" -> ((s, dir) => Dedup.lshRecall(Tables.load(s, dir, "documents"))),
-    "t_feature_hash" -> ((s, dir) => TextOps.featureHash(Tables.load(s, dir, "documents"))),
-    "g_degree_hist" -> ((s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      Graph.degreeHistogram(docs.select("doc_id"), Dedup.dupEdges(docs))
-    }),
-    "w16_pivot_points" -> ((s, dir) => TradeOps.pivotPoints(trades(s, dir))),
-    "w17_twap" -> ((s, dir) => TradeOps.twap(trades(s, dir))),
-    "o9_group_split" -> ((s, dir) => TradeOps.groupSplit(trades(s, dir))),
-    "a22_benford" -> ((s, dir) => TradeOps.benfordProfile(trades(s, dir))),
-    "m_modality_shard" -> ((s, dir) =>
-      Multimodal.modalityShard(Tables.load(s, dir, "documents"))),
-    "e_conversion_paths" -> ((s, dir) =>
-      EventAnalytics.conversionPaths(Tables.events(s, dir))),
-    "p3_props_shred" -> ((s, dir) =>
-      EventAnalytics.propsShred(Tables.events(s, dir))),
-    "w18_run_length" -> ((s, dir) => TradeOps.runLength(trades(s, dir))),
-    "g_kcore" -> ((s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      // dupEdges guarantees a canonical (doc_a < doc_b, distinct,
-      // checkpointed) list — skip kCore's normalize+distinct shuffle
-      Graph.kCore(Dedup.dupEdges(docs), assumeCanonical = true)
-    }),
-    "k13_dynamic_overwrite" -> ((s, dir) =>
-      TradeOps.dynamicPartitionOverwrite(s, trades(s, dir))),
-    "a23_autocorr" -> ((s, dir) => TradeOps.autocorr(trades(s, dir))),
-    "a24_ks_drift" -> ((s, dir) => TradeOps.ksDrift(trades(s, dir))),
-    "e_stickiness" -> ((s, dir) =>
-      EventAnalytics.stickiness(Tables.events(s, dir))),
-    "k14_wap" -> ((s, dir) => graft.sinks.Wap.roundTrip(s, trades(s, dir))),
-    "p_filter_funnel" -> ((s, dir) =>
-      Pipeline.filterFunnel(Tables.load(s, dir, "documents"))),
-    "a25_concentration" -> ((s, dir) => TradeOps.concentration(trades(s, dir))),
-    "f16_target_encode" -> ((s, dir) => TradeOps.targetEncode(trades(s, dir))),
-    "f17_quantile_rank" -> ((s, dir) => TradeOps.quantileRank(trades(s, dir))),
-    "a26_chisq" -> ((s, dir) => TradeOps.chisqHourly(trades(s, dir))),
-    "s16_table_fingerprint" -> ((s, dir) =>
-      TradeOps.tableFingerprint(trades(s, dir))),
-    "v_mips_topk" -> ((s, dir) => Similarity.mipsTopK(s, dir)),
-    "d_cross_dedup" -> ((s, dir) =>
-      Dedup.crossDedup(Tables.load(s, dir, "documents"))),
-    "v_hybrid_rrf" -> ((s, dir) => Similarity.hybridRrf(s, dir)),
-    "o10_purged_embargo" -> ((s, dir) =>
-      TradeOps.purgedEmbargoSplits(trades(s, dir))),
-    "t_tv_drift" -> ((s, dir) =>
-      TextOps.tvDrift(Tables.load(s, dir, "documents"))),
-    "k15_merge_on_read" -> ((s, dir) =>
-      TradeOps.mergeOnRead(s, trades(s, dir))),
-    "s17_zonemap_prune" -> ((s, dir) =>
-      TradeOps.zonemapPrune(s, trades(s, dir))),
-    "s18_bloom_prune" -> ((s, dir) =>
-      TradeOps.bloomPrune(s, trades(s, dir))),
-    "f18_robust_scale" -> ((s, dir) => TradeOps.robustScale(trades(s, dir))),
-    "e_time_to_convert" -> ((s, dir) =>
-      EventAnalytics.timeToConvert(Tables.events(s, dir))),
-    "e_ltv_curve" -> ((s, dir) =>
-      EventAnalytics.ltvCurve(Tables.events(s, dir))),
-    "w19_realized_vol" -> ((s, dir) => TradeOps.realizedVol(trades(s, dir))),
-    "q25_copurchase" -> ((s, dir) => Relational.copurchase(s, dir)),
-    "v_kmeans_purity" -> ((s, dir) => Similarity.kmeansPurity(s, dir)),
-    "a_var_es" -> ((s, dir) => TradeOps.varEs(trades(s, dir))),
-    "a_moment_profile" -> ((s, dir) =>
-      TradeOps.momentProfile(trades(s, dir))),
-    "w_mfi" -> ((s, dir) => TradeOps.mfi(trades(s, dir))),
-    "e_interarrival" -> ((s, dir) =>
-      EventAnalytics.interarrival(Tables.events(s, dir))),
-    "t_readability" -> ((s, dir) =>
-      TextOps.readability(Tables.load(s, dir, "documents"))),
-    "v_mmr_select" -> ((s, dir) => Similarity.mmrSelect(s, dir)),
-    "e_markov_stationary" -> ((s, dir) =>
-      EventAnalytics.markovStationary(Tables.events(s, dir))),
-    "e_simpson_diversity" -> ((s, dir) =>
-      EventAnalytics.simpsonDiversity(Tables.events(s, dir))),
-    "s20_partition_diff" -> ((s, dir) =>
-      TradeOps.partitionDiff(trades(s, dir))),
-    "v_prf_expand" -> ((s, dir) => Similarity.prfExpand(s, dir)),
-    "w_vol_regime" -> ((s, dir) => TradeOps.volRegime(trades(s, dir))),
-    "w_vol_regime_banded" -> ((s, dir) =>
-      TradeOps.volRegimeBanded(trades(s, dir))),
-    "w_donchian" -> ((s, dir) => TradeOps.donchian(trades(s, dir))),
-    "t_heaps_law" -> ((s, dir) =>
-      TextOps.heapsLaw(Tables.load(s, dir, "documents"))),
-    "e_rate_change" -> ((s, dir) =>
-      EventAnalytics.rateChange(Tables.events(s, dir))),
-    "d_len_dup_bias" -> ((s, dir) =>
-      Dedup.lenDupBias(Tables.load(s, dir, "documents"))),
-    "e_audience_overlap" -> ((s, dir) =>
-      EventAnalytics.audienceOverlap(Tables.events(s, dir))),
-    "a_subsample_stability" -> ((s, dir) =>
-      TradeOps.subsampleStability(trades(s, dir))),
-    "q28_ship_latency" -> ((s, dir) => Relational.shipLatency(s, dir)),
-    "q29_order_gap_hist" -> ((s, dir) => Relational.orderGapHist(s, dir)),
-    "v_pq_occupancy" -> ((s, dir) => Similarity.pqOccupancy(s, dir)),
-    "d_cluster_size_hist" -> ((s, dir) =>
-      Dedup.clusterSizeHist(Tables.load(s, dir, "documents"))),
-    "k17_rollback" -> ((s, dir) =>
-      TradeOps.rollbackRoundTrip(s, trades(s, dir))),
-    "v_ivf_occupancy" -> ((s, dir) => Similarity.ivfOccupancy(s, dir)),
-    "w_vpin" -> ((s, dir) => TradeOps.vpin(trades(s, dir))),
-    "p_sqrt_temper" -> ((s, dir) =>
-      Pipeline.sqrtTemper(Tables.load(s, dir, "documents"))),
-    "e_bot_score" -> ((s, dir) =>
-      EventAnalytics.botScore(Tables.events(s, dir))),
-    "v_centroid_auc" -> ((s, dir) => Similarity.centroidAuc(s, dir)),
-    "w_amihud" -> ((s, dir) => TradeOps.amihud(trades(s, dir))),
-    "w_roll_spread" -> ((s, dir) => TradeOps.rollSpread(trades(s, dir))),
-    "a_bootstrap_ci" -> ((s, dir) => TradeOps.bootstrapCi(trades(s, dir))),
-    "w_parkinson" -> ((s, dir) => TradeOps.parkinsonRange(trades(s, dir))),
-    "w_beta_rolling" -> ((s, dir) => TradeOps.rollingBeta(trades(s, dir))),
-    "w_variance_ratio" -> ((s, dir) => TradeOps.varianceRatio(trades(s, dir))),
-    "w_kyle_lambda" -> ((s, dir) => TradeOps.kyleLambda(trades(s, dir))),
-    "w_keltner" -> ((s, dir) => TradeOps.keltner(trades(s, dir))),
-    "a_rank_drift" -> ((s, dir) => TradeOps.rankDrift(trades(s, dir))),
-    "w_adx" -> ((s, dir) => TradeOps.adx(trades(s, dir))),
-    "a_acf_profile" -> ((s, dir) => TradeOps.acfProfile(trades(s, dir))),
-    "w_sharpe" -> ((s, dir) => TradeOps.sharpe(trades(s, dir))),
-    "t_vocab_overlap" -> ((s, dir) =>
-      TextOps.vocabOverlap(Tables.load(s, dir, "documents"))),
-    "a_adf_stat" -> ((s, dir) => TradeOps.adfStat(trades(s, dir))),
-    "w_cci" -> ((s, dir) => TradeOps.cci(trades(s, dir))),
-    "w_hurst_rs" -> ((s, dir) => TradeOps.hurstRs(trades(s, dir))),
-    "w_max_drawdown" -> ((s, dir) => TradeOps.maxDrawdown(trades(s, dir))),
-    "v_hubness" -> ((s, dir) => Similarity.hubness(s, dir)),
-    "v_nn_margin" -> ((s, dir) => Similarity.nnMargin(s, dir)),
-    "e_pareto_share" -> ((s, dir) =>
-      EventAnalytics.paretoShare(Tables.events(s, dir))),
-    "t_hapax_profile" -> ((s, dir) =>
-      TextOps.hapaxProfile(Tables.load(s, dir, "documents"))),
-    "e_new_returning" -> ((s, dir) =>
-      EventAnalytics.newReturning(Tables.events(s, dir))),
-    "v_silhouette" -> ((s, dir) => Similarity.silhouette(s, dir)),
-    "v_davies_bouldin" -> ((s, dir) => Similarity.daviesBouldin(s, dir)),
-    "v_pq_distortion" -> ((s, dir) => Similarity.pqDistortion(s, dir)),
-    "e_lifespan_hist" -> ((s, dir) =>
-      EventAnalytics.lifespanHist(Tables.events(s, dir))),
-    "q30_supplier_hhi" -> ((s, dir) => Relational.supplierHhi(s, dir)),
-    "q31_decile_migration" -> ((s, dir) => Relational.decileMigration(s, dir)),
-    "e_rate_anomaly" -> ((s, dir) =>
-      EventAnalytics.rateAnomaly(Tables.events(s, dir))),
-    "e_rolling_wau" -> ((s, dir) =>
-      EventAnalytics.rollingWau(Tables.events(s, dir))),
-    "w_volume_profile" -> ((s, dir) =>
-      TradeOps.volumeProfile(trades(s, dir))),
-    "v_pca_deflate" -> ((s, dir) => Similarity.pcaDeflate(s, dir)),
-    "g_rich_club" -> ((s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      // fifth consumer of the cached mutual-kNN similarity graph
-      Graph.richClub(Dedup.mutualKnn(
-        Dedup.weightedDupEdges(docs, Dedup.triangleThreshold)))
-    }),
-    "d_bucket_skew" -> ((s, dir) =>
-      Dedup.bucketSkew(Tables.load(s, dir, "documents"))),
-    "q26_revenue_deciles" -> ((s, dir) => Relational.revenueDeciles(s, dir)),
-    "e_seasonal_profile" -> ((s, dir) =>
-      EventAnalytics.seasonalProfile(Tables.events(s, dir))),
-    "w_sortino" -> ((s, dir) => TradeOps.sortino(trades(s, dir))),
-    "w_calmar" -> ((s, dir) => TradeOps.calmar(trades(s, dir))),
-    "w_ulcer" -> ((s, dir) => TradeOps.ulcerIndex(trades(s, dir))),
-    "w_williams_r" -> ((s, dir) => TradeOps.williamsR(trades(s, dir))),
-    "w_obv_divergence" -> ((s, dir) => TradeOps.obvDivergence(trades(s, dir))),
-    "e_active_streaks" -> ((s, dir) =>
-      EventAnalytics.activeStreaks(Tables.events(s, dir))),
-    "g_two_hop_reach" -> ((s, dir) => {
-      val docs = Tables.load(s, dir, "documents")
-      // rides the cached mutual-kNN graph (deg <= k): the raw dup
-      // graph's boilerplate near-cliques make the mid-vertex join
-      // cubic — measured live at sf0.1 (disk-filling shuffle spill)
-      Graph.twoHopReach(docs.select("doc_id"), Dedup.mutualKnn(
-        Dedup.weightedDupEdges(docs, Dedup.triangleThreshold)))
-    }),
-    "v_int8_order_flips" -> ((s, dir) => Similarity.int8OrderFlips(s, dir)),
-    "k18_snapshot_expire" -> ((s, dir) =>
-      TradeOps.snapshotExpire(s, trades(s, dir))),
-    "e_churn_rate" -> ((s, dir) =>
-      EventAnalytics.churnRate(Tables.events(s, dir))),
-    "w_squeeze" -> ((s, dir) => TradeOps.squeeze(trades(s, dir))),
-    "w_rvi" -> ((s, dir) => TradeOps.rvi(trades(s, dir))),
-    "a_round_price_bias" -> ((s, dir) =>
-      TradeOps.roundPriceBias(trades(s, dir))),
-    "w_gap_fill" -> ((s, dir) => TradeOps.gapFill(trades(s, dir))),
-    "w_narrow_range" -> ((s, dir) => TradeOps.narrowRange(trades(s, dir))),
-    "k19_compact_generations" -> ((s, dir) =>
-      TradeOps.compactGenerations(s, trades(s, dir))),
-    "a_depth_ladder" -> ((s, dir) => TradeOps.depthLadder(trades(s, dir))),
-    "p_balanced_sample" -> ((s, dir) =>
-      Pipeline.balancedSample(Tables.load(s, dir, "documents"))),
-    "d_source_similarity" -> ((s, dir) =>
-      Dedup.sourceSimilarity(Tables.load(s, dir, "documents"))),
-    "k20_prediction_accuracy" -> ((s, dir) =>
-      Predict.predictionAccuracy(trades(s, dir))),
-    "k21_audited_lifecycle" -> ((s, dir) =>
-      graft.sinks.Wap.auditedLifecycle(s, trades(s, dir))),
-    "k22_schema_evolution" -> ((s, dir) =>
-      TradeOps.schemaEvolution(s, trades(s, dir))),
-    "k23_gdpr_purge" -> ((s, dir) =>
-      TradeOps.gdprPurge(s, trades(s, dir))),
-    "q_constraint_suite" -> ((s, dir) =>
-      Relational.constraintSuite(s, dir)),
-    "e_survival_curve" -> ((s, dir) =>
-      EventAnalytics.survivalCurve(Tables.events(s, dir))),
-    "j_fanout_profile" -> ((s, dir) =>
-      Relational.fanoutProfile(s, dir)),
-    "e_cuped_ab" -> ((s, dir) =>
-      EventAnalytics.cupedAb(Tables.events(s, dir))),
-    "p_k_anonymize" -> ((s, dir) =>
-      Pipeline.kAnonymize(Tables.events(s, dir))),
-  )
-
   private val T = Tables.tradesCte
 
   private val decodeRoundTripSql: String =
@@ -614,170 +36,29 @@ object SparkEntry {
        |         AS cumulative_volume
        |FROM trades""".stripMargin
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] = Map(
-    "p1_decode_roundtrip" -> decodeRoundTripSql,
-    "p1b_avro_roundtrip" -> decodeRoundTripSql,
+  /** One registered batch query: its Spark plan over a table dir and the
+    * equivalent DuckDB SQL over the same parquet tables (`oracleSql`).
+    * Both sides agree on column names and rounding. */
+  final case class Query(name: String,
+      build: (SparkSession, String) => DataFrame, oracleSql: String)
 
-    "a8_null_profile" -> {
-      val cols = Seq("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
-        "l_quantity", "l_extendedprice", "l_discount", "l_tax",
-        "l_returnflag", "l_linestatus", "l_shipdate")
-      cols.map(c => s"count(*) - count($c) AS nulls_$c")
-        .mkString("SELECT ", ",\n       ", "\nFROM lineitem")
-    },
-
-    "k4_partitioned_roundtrip" ->
-      s"""$T
-         |SELECT event_id, symbol, "timestamp", price, volume FROM trades
-         |WHERE year("timestamp") = 2024 AND month("timestamp") = 1""".stripMargin,
-
-    "a9_time_bounds" ->
-      s"""$T
-         |SELECT min("timestamp") AS ts_min, max("timestamp") AS ts_max,
-         |       count(*) AS n_rows
-         |FROM trades""".stripMargin,
-
-    "o5_union_append" ->
-      s"""$T
-         |SELECT event_id, symbol, price FROM trades WHERE symbol = 'click'
-         |UNION ALL
-         |SELECT event_id, symbol, price FROM trades WHERE symbol = 'purchase'""".stripMargin,
-
-    "j_full_outer_daily" ->
-      s"""$T,
-         |c AS (SELECT date_trunc('day', "timestamp") AS day, count(*) AS n_clicks
-         |      FROM trades WHERE symbol = 'click' GROUP BY 1),
-         |p AS (SELECT date_trunc('day', "timestamp") AS day, count(*) AS n_purchases
-         |      FROM trades WHERE symbol = 'purchase' GROUP BY 1)
-         |SELECT coalesce(c.day, p.day) AS day, c.n_clicks, p.n_purchases
-         |FROM c FULL OUTER JOIN p ON c.day = p.day""".stripMargin,
-
-    "a_grouping_sets" ->
-      """SELECT l_returnflag, l_linestatus,
-        |       CAST(GROUPING(l_returnflag) AS INT) AS g_rf,
-        |       CAST(GROUPING(l_linestatus) AS INT) AS g_ls,
-        |       CAST(CAST(sum(CAST(l_quantity AS DECIMAL(18,6))) * 1000000 AS BIGINT) AS DOUBLE) / 1000000.0 AS sum_qty, count(*) AS n_rows
-        |FROM lineitem
-        |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())""".stripMargin,
-
-    "t_normalize" -> TextOps.normalizeSql,
-    "t_stratified_sample" -> TextOps.stratifiedSampleSql(),
-    "t_pack_sequences" -> TextOps.packSequencesSql(),
-    "t_source_mix" -> TextOps.sourceMixSampleSql(),
-    "v_quantize_int8" -> Similarity.quantizeInt8Sql,
-
-    "a10_quantiles" ->
-      s"""$T,
-         |ranked AS (
-         |  SELECT symbol, price,
-         |         row_number() OVER (PARTITION BY symbol ORDER BY price, event_id) AS rn,
-         |         count(*) OVER (PARTITION BY symbol) AS n
-         |  FROM trades
-         |)
-         |SELECT symbol,
-         |  max(CASE WHEN rn = CAST(ceil(0.5::DOUBLE * n) AS BIGINT) THEN price END) AS p50,
-         |  max(CASE WHEN rn = CAST(ceil(0.9::DOUBLE * n) AS BIGINT) THEN price END) AS p90,
-         |  max(CASE WHEN rn = CAST(ceil(0.99::DOUBLE * n) AS BIGINT) THEN price END) AS p99
-         |FROM ranked GROUP BY 1""".stripMargin,
-
-    // GK sketches aren't cross-engine comparable; the oracle asserts the
-    // exact quantiles plus the rank-envelope flags as constant 1s
-    "a10b_approx_quantiles" ->
-      s"""$T,
-         |ranked AS (
-         |  SELECT symbol, price,
-         |         row_number() OVER (PARTITION BY symbol ORDER BY price, event_id) AS rn,
-         |         count(*) OVER (PARTITION BY symbol) AS n
-         |  FROM trades
-         |)
-         |SELECT symbol,
-         |  max(CASE WHEN rn = CAST(ceil(0.5::DOUBLE * n) AS BIGINT) THEN price END) AS p50,
-         |  max(CASE WHEN rn = CAST(ceil(0.9::DOUBLE * n) AS BIGINT) THEN price END) AS p90,
-         |  max(CASE WHEN rn = CAST(ceil(0.99::DOUBLE * n) AS BIGINT) THEN price END) AS p99,
-         |  1 AS p50_in_spec, 1 AS p90_in_spec, 1 AS p99_in_spec
-         |FROM ranked GROUP BY 1""".stripMargin,
-
-    "o6_set_ops" ->
-      s"""$T,
-         |c AS (SELECT user_id FROM trades WHERE symbol = 'click'),
-         |p AS (SELECT user_id FROM trades WHERE symbol = 'purchase')
-         |SELECT user_id, 'both' AS membership FROM (SELECT * FROM c INTERSECT SELECT * FROM p)
-         |UNION ALL
-         |SELECT user_id, 'click_only' AS membership FROM (SELECT * FROM c EXCEPT SELECT * FROM p)
-         |UNION ALL
-         |SELECT user_id, 'purchase_only' AS membership FROM (SELECT * FROM p EXCEPT SELECT * FROM c)""".stripMargin,
-
-    "f5_time_convert" ->
-      s"""$T
-         |SELECT event_id,
-         |       date_trunc('milliseconds', "timestamp") AS ts_iso_roundtrip,
-         |       date_trunc('second', "timestamp") AS ts_second_floor,
-         |       "timestamp" + INTERVAL 10 SECOND AS ts_next_interval
-         |FROM trades""".stripMargin,
-
-    "s5_csv_roundtrip" ->
-      s"""$T
-         |SELECT event_id, symbol, "timestamp", price, volume FROM trades""".stripMargin,
-
-    "s8_json_roundtrip" ->
-      s"""$T
-         |SELECT event_id, symbol, "timestamp", price, volume FROM trades""".stripMargin,
-
-    "s11_orc_roundtrip" ->
-      s"""$T
-         |SELECT event_id, symbol, "timestamp", price, volume FROM trades""".stripMargin,
-
-    "t15_session_windows" ->
-      s"""$T,
-         |m AS (
-         |  SELECT user_id, "timestamp", usd_volume,
-         |         CASE WHEN "timestamp" - lag("timestamp") OVER (
-         |             PARTITION BY user_id ORDER BY "timestamp")
-         |           <= INTERVAL 5 MINUTE THEN 0 ELSE 1 END AS new_s
-         |  FROM trades
-         |), s AS (
-         |  SELECT user_id, "timestamp", usd_volume,
-         |         sum(new_s) OVER (PARTITION BY user_id ORDER BY "timestamp"
-         |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-         |  FROM m
-         |)
-         |SELECT user_id,
-         |       min("timestamp") AS session_start,
-         |       max("timestamp") + INTERVAL 5 MINUTE AS session_end,
-         |       count(*) AS n_events,
-         |       CAST(CAST(sum(CAST(usd_volume AS DECIMAL(18,6))) * 1000000 AS BIGINT) AS DOUBLE) / 1000000.0 AS session_usd
-         |FROM s GROUP BY user_id, sid""".stripMargin,
-
-    "skew_salted_agg" ->
-      s"""$T
-         |SELECT symbol,
-         |       CAST(CAST(sum(CAST(volume AS DECIMAL(18,6))) * 1000000 AS BIGINT) AS DOUBLE) / 1000000.0 AS total_volume,
-         |       count(*) AS n_trades,
-         |       min(price) AS min_price,
-         |       max(price) AS max_price
-         |FROM trades GROUP BY symbol""".stripMargin,
-
-    "k9_zorder_roundtrip" -> s"$T,\n${Scale.zorderSql()}",
-
-    "b_bucketed_join" ->
-      """SELECT c.c_custkey, c.c_name,
-        |       count(*) AS n_orders,
-        |       (CAST(CAST(sum(CAST(o.o_totalprice AS DECIMAL(18,6))) * 1000000 AS BIGINT) AS DOUBLE) / 1000000.0) AS revenue
-        |FROM customer c JOIN orders o ON c.c_custkey = o.o_custkey
-        |GROUP BY 1, 2""".stripMargin,
-
-    "a1_tumbling_volume" ->
+  /** One entry per implemented operator from SURVEY.md §2. */
+  val registry: Seq[Query] = Seq(
+    // -- ingest / projection tier (P1-P9) --------------------------------
+    Query("p1_decode_roundtrip", (s, dir) => Decode.roundTrip(trades(s, dir)),
+      decodeRoundTripSql),
+    Query("p1b_avro_roundtrip", (s, dir) => Decode.avroRoundTrip(s, trades(s, dir)),
+      decodeRoundTripSql),
+    // -- aggregation tier (A1-A6, T3-T4) ---------------------------------
+    Query("a1_tumbling_volume", (s, dir) => TradeOps.tumblingVolume(trades(s, dir)),
       s"""$T
          |SELECT symbol,
          |       date_trunc('minute', "timestamp") AS "timestamp",
          |       CAST(CAST(sum(CAST(volume AS DECIMAL(18,6))) * 1000000 AS BIGINT) AS DOUBLE) / 1000000.0 AS total_volume,
          |       CAST(CAST(sum(CAST(usd_volume AS DECIMAL(18,6))) * 1000000 AS BIGINT) AS DOUBLE) / 1000000.0 AS total_usd_volume,
          |       count(*) AS n_trades
-         |FROM trades GROUP BY 1, 2""".stripMargin,
-
-    "a2_sliding_features" ->
+         |FROM trades GROUP BY 1, 2""".stripMargin),
+    Query("a2_sliding_features", (s, dir) => TradeOps.slidingFeatures(trades(s, dir)),
       s"""$T
          |SELECT symbol,
          |       make_timestamp((CAST(floor(epoch("timestamp") / 10) AS BIGINT) * 10 - k) * 1000000)
@@ -789,18 +70,17 @@ object SparkEntry {
          |       min(price) AS low,
          |       count(price) AS num_trades
          |FROM trades CROSS JOIN (VALUES (0), (10), (20)) offs(k)
-         |GROUP BY 1, 2""".stripMargin,
-
-    "w1_cumulative_volume" ->
+         |GROUP BY 1, 2""".stripMargin),
+    // -- window-function tier (W1-W3, A7) --------------------------------
+    Query("w1_cumulative_volume", (s, dir) => TradeOps.cumulativeVolume(trades(s, dir)),
       s"""$T
          |SELECT event_id, symbol, "timestamp", volume,
          |       CAST(CAST(sum(CAST(volume AS DECIMAL(18,6))) OVER (PARTITION BY symbol
          |         ORDER BY "timestamp", event_id
          |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) * 1000000 AS BIGINT) AS DOUBLE) / 1000000.0
          |         AS cumulative_volume
-         |FROM trades""".stripMargin,
-
-    "w2_lookback_avg" ->
+         |FROM trades""".stripMargin),
+    Query("w2_lookback_avg", (s, dir) => TradeOps.lookbackAvg(trades(s, dir)),
       s"""$T
          |SELECT event_id, symbol, "timestamp", lookback_avg, n_rows FROM (
          |  SELECT event_id, symbol, "timestamp",
@@ -809,12 +89,12 @@ object SparkEntry {
          |  FROM trades
          |  WINDOW w AS (PARTITION BY symbol ORDER BY "timestamp", event_id
          |               ROWS BETWEEN 99 PRECEDING AND CURRENT ROW)
-         |) WHERE n_rows = 100""".stripMargin,
-
-    "w2b_lookback_matrix" -> Predict.lookbackMatrixDigestSql(),
-    "k7_predict_writeback" -> Predict.predictSql(),
-
-    "w3_resample_interpolate" ->
+         |) WHERE n_rows = 100""".stripMargin),
+    Query("w2b_lookback_matrix", (s, dir) => Predict.lookbackMatrixDigest(trades(s, dir)),
+      Predict.lookbackMatrixDigestSql()),
+    Query("k7_predict_writeback", (s, dir) => Predict.predictWriteback(s, trades(s, dir), dir),
+      Predict.predictSql()),
+    Query("w3_resample_interpolate", (s, dir) => Resample.interpolateHourly(trades(s, dir)),
       s"""$T, obs AS (
          |  SELECT symbol, date_trunc('hour', "timestamp") AS bucket,
          |         arg_max(price, event_id) AS p, count(*) AS n
@@ -849,24 +129,22 @@ object SparkEntry {
          |                CAST(epoch(nt)::BIGINT - epoch(pt)::BIGINT AS DOUBLE))
          |        END) AS price_filled,
          |  n_ff AS n_trades_ff
-         |FROM n8""".stripMargin,
-
-    "f9_minmax_scale" ->
+         |FROM n8""".stripMargin),
+    // -- scalar/derivation tier (F2, F3, F9) -----------------------------
+    Query("f9_minmax_scale", (s, dir) => TradeOps.minMaxScale(trades(s, dir)),
       s"""$T
          |SELECT event_id, symbol, price,
          |       ((price - min(price) OVER (PARTITION BY symbol)) /
          |             (max(price) OVER (PARTITION BY symbol) -
          |              min(price) OVER (PARTITION BY symbol))) AS scaled
-         |FROM trades""".stripMargin,
-
-    "f3_dateparts" ->
+         |FROM trades""".stripMargin),
+    Query("f3_dateparts", (s, dir) => TradeOps.dateParts(trades(s, dir)),
       s"""$T
          |SELECT year("timestamp") AS year, month("timestamp") AS month,
          |       day("timestamp") AS day, hour("timestamp") AS hour,
          |       count(*) AS n, CAST(CAST(sum(CAST(volume AS DECIMAL(18,6))) * 1000000 AS BIGINT) AS DOUBLE) / 1000000.0 AS total_volume
-         |FROM trades GROUP BY 1, 2, 3, 4""".stripMargin,
-
-    "f2_json_kv" ->
+         |FROM trades GROUP BY 1, 2, 3, 4""".stripMargin),
+    Query("f2_json_kv", (s, dir) => TradeOps.jsonKeyValue(trades(s, dir)),
       s"""$T, bars AS (
          |  SELECT symbol, date_trunc('minute', "timestamp") AS minute_start,
          |         count(*) AS n_trades
@@ -877,23 +155,125 @@ object SparkEntry {
          |         symbol := symbol,
          |         minute_start := CAST(minute_start AS VARCHAR),
          |         n_trades := n_trades))::VARCHAR AS value
-         |FROM bars""".stripMargin,
-
-    "s6_serving_range" ->
+         |FROM bars""".stripMargin),
+    // -- profiling / time-conversion tier (A8, A9, F5-F7, O5, S5/K8) -----
+    Query("a8_null_profile", (s, dir) => TradeOps.nullProfile(Tables.load(s, dir, "lineitem")),
+      {
+      val cols = Seq("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
+        "l_quantity", "l_extendedprice", "l_discount", "l_tax",
+        "l_returnflag", "l_linestatus", "l_shipdate")
+      cols.map(c => s"count(*) - count($c) AS nulls_$c")
+        .mkString("SELECT ", ",\n       ", "\nFROM lineitem")
+    }),
+    Query("a9_time_bounds", (s, dir) => TradeOps.timeBounds(trades(s, dir)),
+      s"""$T
+         |SELECT min("timestamp") AS ts_min, max("timestamp") AS ts_max,
+         |       count(*) AS n_rows
+         |FROM trades""".stripMargin),
+    Query("a10_quantiles", (s, dir) => TradeOps.discreteQuantiles(trades(s, dir)),
+      s"""$T,
+         |ranked AS (
+         |  SELECT symbol, price,
+         |         row_number() OVER (PARTITION BY symbol ORDER BY price, event_id) AS rn,
+         |         count(*) OVER (PARTITION BY symbol) AS n
+         |  FROM trades
+         |)
+         |SELECT symbol,
+         |  max(CASE WHEN rn = CAST(ceil(0.5::DOUBLE * n) AS BIGINT) THEN price END) AS p50,
+         |  max(CASE WHEN rn = CAST(ceil(0.9::DOUBLE * n) AS BIGINT) THEN price END) AS p90,
+         |  max(CASE WHEN rn = CAST(ceil(0.99::DOUBLE * n) AS BIGINT) THEN price END) AS p99
+         |FROM ranked GROUP BY 1""".stripMargin),
+    Query("a10b_approx_quantiles", (s, dir) => TradeOps.approxQuantilesChecked(trades(s, dir)),
+      // GK sketches aren't cross-engine comparable; the oracle asserts the
+      // exact quantiles plus the rank-envelope flags as constant 1s
+      s"""$T,
+         |ranked AS (
+         |  SELECT symbol, price,
+         |         row_number() OVER (PARTITION BY symbol ORDER BY price, event_id) AS rn,
+         |         count(*) OVER (PARTITION BY symbol) AS n
+         |  FROM trades
+         |)
+         |SELECT symbol,
+         |  max(CASE WHEN rn = CAST(ceil(0.5::DOUBLE * n) AS BIGINT) THEN price END) AS p50,
+         |  max(CASE WHEN rn = CAST(ceil(0.9::DOUBLE * n) AS BIGINT) THEN price END) AS p90,
+         |  max(CASE WHEN rn = CAST(ceil(0.99::DOUBLE * n) AS BIGINT) THEN price END) AS p99,
+         |  1 AS p50_in_spec, 1 AS p90_in_spec, 1 AS p99_in_spec
+         |FROM ranked GROUP BY 1""".stripMargin),
+    Query("o5_union_append", (s, dir) => TradeOps.unionAppend(trades(s, dir)),
+      s"""$T
+         |SELECT event_id, symbol, price FROM trades WHERE symbol = 'click'
+         |UNION ALL
+         |SELECT event_id, symbol, price FROM trades WHERE symbol = 'purchase'""".stripMargin),
+    Query("o6_set_ops", (s, dir) => TradeOps.setOps(trades(s, dir)),
+      s"""$T,
+         |c AS (SELECT user_id FROM trades WHERE symbol = 'click'),
+         |p AS (SELECT user_id FROM trades WHERE symbol = 'purchase')
+         |SELECT user_id, 'both' AS membership FROM (SELECT * FROM c INTERSECT SELECT * FROM p)
+         |UNION ALL
+         |SELECT user_id, 'click_only' AS membership FROM (SELECT * FROM c EXCEPT SELECT * FROM p)
+         |UNION ALL
+         |SELECT user_id, 'purchase_only' AS membership FROM (SELECT * FROM p EXCEPT SELECT * FROM c)""".stripMargin),
+    Query("j_full_outer_daily", (s, dir) => TradeOps.fullOuterDaily(trades(s, dir)),
+      s"""$T,
+         |c AS (SELECT date_trunc('day', "timestamp") AS day, count(*) AS n_clicks
+         |      FROM trades WHERE symbol = 'click' GROUP BY 1),
+         |p AS (SELECT date_trunc('day', "timestamp") AS day, count(*) AS n_purchases
+         |      FROM trades WHERE symbol = 'purchase' GROUP BY 1)
+         |SELECT coalesce(c.day, p.day) AS day, c.n_clicks, p.n_purchases
+         |FROM c FULL OUTER JOIN p ON c.day = p.day""".stripMargin),
+    Query("a_grouping_sets", (s, dir) => Relational.groupingSetsSummary(s, dir),
+      """SELECT l_returnflag, l_linestatus,
+        |       CAST(GROUPING(l_returnflag) AS INT) AS g_rf,
+        |       CAST(GROUPING(l_linestatus) AS INT) AS g_ls,
+        |       CAST(CAST(sum(CAST(l_quantity AS DECIMAL(18,6))) * 1000000 AS BIGINT) AS DOUBLE) / 1000000.0 AS sum_qty, count(*) AS n_rows
+        |FROM lineitem
+        |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())""".stripMargin),
+    Query("t_normalize", (s, dir) => TextOps.normalize(Tables.load(s, dir, "documents")),
+      TextOps.normalizeSql),
+    Query("t_stratified_sample", (s, dir) => TextOps.stratifiedSample(Tables.load(s, dir, "documents")),
+      TextOps.stratifiedSampleSql()),
+    Query("t_pack_sequences", (s, dir) => TextOps.packSequences(Tables.load(s, dir, "documents")),
+      TextOps.packSequencesSql()),
+    Query("t_source_mix", (s, dir) => TextOps.sourceMixSample(Tables.load(s, dir, "documents")),
+      TextOps.sourceMixSampleSql()),
+    Query("v_quantize_int8", (s, dir) => Similarity.quantizeInt8(s, dir),
+      Similarity.quantizeInt8Sql),
+    Query("f5_time_convert", (s, dir) => TradeOps.timeConvert(trades(s, dir)),
+      s"""$T
+         |SELECT event_id,
+         |       date_trunc('milliseconds', "timestamp") AS ts_iso_roundtrip,
+         |       date_trunc('second', "timestamp") AS ts_second_floor,
+         |       "timestamp" + INTERVAL 10 SECOND AS ts_next_interval
+         |FROM trades""".stripMargin),
+    Query("s5_csv_roundtrip", (s, dir) => TradeOps.csvRoundTrip(s, trades(s, dir)),
+      s"""$T
+         |SELECT event_id, symbol, "timestamp", price, volume FROM trades""".stripMargin),
+    Query("s11_orc_roundtrip", (s, dir) => TradeOps.orcRoundTrip(s, trades(s, dir)),
+      s"""$T
+         |SELECT event_id, symbol, "timestamp", price, volume FROM trades""".stripMargin),
+    Query("s8_json_roundtrip", (s, dir) => TradeOps.jsonRoundTrip(s, trades(s, dir)),
+      s"""$T
+         |SELECT event_id, symbol, "timestamp", price, volume FROM trades""".stripMargin),
+    Query("k4_partitioned_roundtrip", (s, dir) => TradeOps.partitionedRoundTrip(s, trades(s, dir)),
+      s"""$T
+         |SELECT event_id, symbol, "timestamp", price, volume FROM trades
+         |WHERE year("timestamp") = 2024 AND month("timestamp") = 1""".stripMargin),
+    // -- serving tier (S6, O1, O2, O4) -----------------------------------
+    Query("s6_serving_range", (s, dir) =>
+      TradeOps.servingRange(trades(s, dir), "click", "2024-01-05 00:00:00", "2024-01-20 00:00:00"),
       s"""$T
          |SELECT event_id, "timestamp", price FROM trades
          |WHERE symbol = 'click'
          |  AND "timestamp" BETWEEN TIMESTAMP '2024-01-05 00:00:00'
-         |                      AND TIMESTAMP '2024-01-20 00:00:00'""".stripMargin,
-
-    "s7_keyed_point_read" ->
+         |                      AND TIMESTAMP '2024-01-20 00:00:00'""".stripMargin),
+    Query("s7_keyed_point_read", (s, dir) =>
+      TradeOps.keyedPointRead(s, trades(s, dir), dir, "click", "2024-01-05 00:00:00", "2024-01-20 00:00:00"),
       s"""$T
          |SELECT event_id, "timestamp", price FROM trades
          |WHERE symbol = 'click'
          |  AND "timestamp" BETWEEN TIMESTAMP '2024-01-05 00:00:00'
-         |                      AND TIMESTAMP '2024-01-20 00:00:00'""".stripMargin,
-
-    "s9_time_travel" ->
+         |                      AND TIMESTAMP '2024-01-20 00:00:00'""".stripMargin),
+    Query("s9_time_travel", (s, dir) => TradeOps.timeTravelRead(s, trades(s, dir), dir),
       s"""$T, k AS (
          |  SELECT symbol, date_trunc('hour', "timestamp") AS hr,
          |         event_id % 3 AS batch,
@@ -906,21 +286,8 @@ object SparkEntry {
          |  FROM k WHERE batch <= 1
          |)
          |SELECT symbol, hr, n_events, max_event_id
-         |FROM pick WHERE rn = 1""".stripMargin,
-
-    "w5_ewma" ->
-      s"""$T
-         |${TradeOps.ewmaSql()}""".stripMargin,
-
-    "w6_rolling_median" ->
-      s"""$T
-         |${TradeOps.rollingMedianSql()}""".stripMargin,
-
-    "a11_price_histogram" ->
-      s"""$T,
-         |${TradeOps.priceHistogramSql().stripPrefix("WITH ")}""".stripMargin,
-
-    "s10_version_diff" ->
+         |FROM pick WHERE rn = 1""".stripMargin),
+    Query("s10_version_diff", (s, dir) => TradeOps.versionDiff(s, trades(s, dir), dir),
       s"""$T, k AS (
          |  SELECT symbol, date_trunc('hour', "timestamp") AS hr,
          |         event_id % 3 AS batch,
@@ -949,9 +316,8 @@ object SparkEntry {
          |            WHEN o.n_events != n.n_events
          |              OR o.max_event_id != n.max_event_id THEN 'update'
          |            ELSE 'unchanged' END AS change_type
-         |FROM v1 o FULL OUTER JOIN v2 n USING (symbol, hr)""".stripMargin,
-
-    "w4_analytic_funcs" ->
+         |FROM v1 o FULL OUTER JOIN v2 n USING (symbol, hr)""".stripMargin),
+    Query("w4_analytic_funcs", (s, dir) => TradeOps.analyticWindows(trades(s, dir)),
       s"""$T
          |SELECT symbol, event_id,
          |       ntile(4) OVER w AS quartile,
@@ -960,15 +326,24 @@ object SparkEntry {
          |       first_value(price) OVER w AS first_price,
          |       nth_value(price, 100) OVER w AS price_100th
          |FROM trades
-         |WINDOW w AS (PARTITION BY symbol ORDER BY "timestamp", event_id)""".stripMargin,
-
-    "o2_last_row" ->
+         |WINDOW w AS (PARTITION BY symbol ORDER BY "timestamp", event_id)""".stripMargin),
+    Query("w5_ewma", (s, dir) => TradeOps.ewma(trades(s, dir)),
+      s"""$T
+         |${TradeOps.ewmaSql()}""".stripMargin),
+    Query("w6_rolling_median", (s, dir) => TradeOps.rollingMedian(trades(s, dir)),
+      s"""$T
+         |${TradeOps.rollingMedianSql()}""".stripMargin),
+    Query("a11_price_histogram", (s, dir) => TradeOps.priceHistogram(trades(s, dir)),
+      s"""$T,
+         |${TradeOps.priceHistogramSql().stripPrefix("WITH ")}""".stripMargin),
+    Query("t_bigram_topk", (s, dir) => TextOps.bigramTopK(Tables.load(s, dir, "documents")),
+      TextOps.bigramTopKSql()),
+    Query("o2_last_row", (s, dir) => TradeOps.lastRow(trades(s, dir)),
       s"""$T
          |SELECT symbol, arg_max(price, event_id) AS last_price,
          |       max("timestamp") AS last_ts
-         |FROM trades GROUP BY 1""".stripMargin,
-
-    "o4_ordered_split" ->
+         |FROM trades GROUP BY 1""".stripMargin),
+    Query("o4_ordered_split", (s, dir) => TradeOps.orderedSplit(trades(s, dir)),
       s"""$T, numbered AS (
          |  SELECT event_id, symbol,
          |         row_number() OVER (ORDER BY "timestamp", event_id) AS rn,
@@ -978,9 +353,18 @@ object SparkEntry {
          |SELECT event_id, symbol,
          |       CASE WHEN rn <= floor(total * 0.8::DOUBLE) THEN 'train'
          |            ELSE 'test' END AS split
-         |FROM numbered""".stripMargin,
-
-    "j_asof_click" ->
+         |FROM numbered""".stripMargin),
+    // -- joins (§2.6; as-of per predict_btc.py:88-91) --------------------
+    Query("j_asof_click", (s, dir) => {
+      val t = trades(s, dir)
+      val purchases = t.filter(col("symbol") === "purchase")
+        .select("event_id", "user_id", "timestamp", "price")
+      val clicks = t.filter(col("symbol") === "click")
+        .groupBy("user_id", "timestamp")
+        .agg(max_by(col("price"), col("event_id")).as("click_price"))
+      AsOfJoin.asOf(purchases, clicks, "user_id", "timestamp",
+        "click_price", "click_price")
+    },
       s"""$T, p AS (
          |  SELECT event_id, user_id, "timestamp", price
          |  FROM trades WHERE symbol = 'purchase'
@@ -991,9 +375,17 @@ object SparkEntry {
          |)
          |SELECT p.event_id, p.user_id, p."timestamp", p.price, c.click_price
          |FROM p ASOF LEFT JOIN c
-         |  ON p.user_id = c.user_id AND c.cts <= p."timestamp"""".stripMargin,
-
-    "j_asof_nearest" ->
+         |  ON p.user_id = c.user_id AND c.cts <= p."timestamp"""".stripMargin),
+    Query("j_asof_nearest", (s, dir) => {
+      val t = trades(s, dir)
+      val purchases = t.filter(col("symbol") === "purchase")
+        .select("event_id", "user_id", "timestamp", "price")
+      val clicks = t.filter(col("symbol") === "click")
+        .groupBy("user_id", "timestamp")
+        .agg(max_by(col("price"), col("event_id")).as("click_price"))
+      AsOfJoin.asOfNearest(purchases, clicks, "user_id", "timestamp",
+        "click_price", "near_price")
+    },
       s"""$T, p AS (
          |  SELECT event_id, user_id, "timestamp", price
          |  FROM trades WHERE symbol = 'purchase'
@@ -1022,8 +414,17 @@ object SparkEntry {
          |            ELSE (epoch_us(ft) - epoch_us(p."timestamp")) // 1000
          |       END AS delta_ms
          |FROM p LEFT JOIN b USING (event_id)
-         |       LEFT JOIN f USING (event_id)""".stripMargin,
-    "j_asof_tolerance" ->
+         |       LEFT JOIN f USING (event_id)""".stripMargin),
+    Query("j_asof_tolerance", (s, dir) => {
+      val t = trades(s, dir)
+      val purchases = t.filter(col("symbol") === "purchase")
+        .select("event_id", "user_id", "timestamp", "price")
+      val clicks = t.filter(col("symbol") === "click")
+        .groupBy("user_id", "timestamp")
+        .agg(max_by(col("price"), col("event_id")).as("click_price"))
+      AsOfJoin.asOfTolerance(purchases, clicks, "user_id", "timestamp",
+        "click_price", "tol_price", toleranceMs = 60000L)
+    },
       s"""$T, p AS (
          |  SELECT event_id, user_id, "timestamp", price
          |  FROM trades WHERE symbol = 'purchase'
@@ -1047,20 +448,18 @@ object SparkEntry {
          |                     <= 60000
          |            THEN (epoch_us("timestamp") - epoch_us(cts)) // 1000
          |       END AS staleness_ms
-         |FROM b""".stripMargin,
-
-    "j_semi_customers_with_orders" ->
+         |FROM b""".stripMargin),
+    Query("j_semi_customers_with_orders", (s, dir) => Relational.customersWithOrders(s, dir),
       """SELECT c_custkey, c_name, c_mktsegment FROM customer c
-        |WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)""".stripMargin,
-
-    "j_anti_customers_without_orders" ->
+        |WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)""".stripMargin),
+    Query("j_anti_customers_without_orders", (s, dir) => Relational.customersWithoutOrders(s, dir),
       """SELECT c_custkey, c_name, c_mktsegment FROM customer c
-        |WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)""".stripMargin,
-
-    // money sums route DECIMAL → exact micro BIGINT → one long→double
-    // cast (Relational.decD): a direct decimal cast double-rounds in
-    // DuckDB past 2^53 micro-units (r13 sf1 catch)
-    "q1_pricing_summary" ->
+        |WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)""".stripMargin),
+    // -- relational breadth ----------------------------------------------
+    Query("q1_pricing_summary", (s, dir) => Relational.pricingSummary(s, dir),
+      // money sums route DECIMAL → exact micro BIGINT → one long→double
+      // cast (Relational.decD): a direct decimal cast double-rounds in
+      // DuckDB past 2^53 micro-units (r13 sf1 catch)
       """SELECT l_returnflag, l_linestatus,
         |       CAST(CAST(sum(CAST(l_quantity AS DECIMAL(18,6))) * 1000000 AS BIGINT) AS DOUBLE) / 1000000.0 AS sum_qty,
         |       CAST(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,6))) * 1000000 AS BIGINT) AS DOUBLE) / 1000000.0 AS sum_base_price,
@@ -1072,9 +471,8 @@ object SparkEntry {
         |       count(*) AS count_order
         |FROM lineitem
         |WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-        |GROUP BY 1, 2""".stripMargin,
-
-    "q3_shipping_priority" ->
+        |GROUP BY 1, 2""".stripMargin),
+    Query("q3_shipping_priority", (s, dir) => Relational.shippingPriority(s, dir),
       """SELECT o_orderkey, o_orderdate, o_orderpriority,
         |       CAST(CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) * 1000000 AS BIGINT) AS DOUBLE) / 1000000.0 AS revenue
         |FROM lineitem
@@ -1083,9 +481,8 @@ object SparkEntry {
         |WHERE c_mktsegment = 'BUILDING'
         |GROUP BY 1, 2, 3
         |ORDER BY revenue DESC, o_orderkey
-        |LIMIT 10""".stripMargin,
-
-    "q5_revenue_by_nation" ->
+        |LIMIT 10""".stripMargin),
+    Query("q5_revenue_by_nation", (s, dir) => Relational.localSupplierVolume(s, dir),
       """SELECT r_name, n_name,
         |       CAST(CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) * 1000000 AS BIGINT) AS DOUBLE) / 1000000.0 AS revenue,
         |       count(*) AS n_items
@@ -1094,9 +491,8 @@ object SparkEntry {
         |JOIN customer ON o_custkey = c_custkey
         |JOIN nation ON c_nationkey = n_nationkey
         |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY 1, 2""".stripMargin,
-
-    "q10_returned_revenue" ->
+        |GROUP BY 1, 2""".stripMargin),
+    Query("q10_returned_revenue", (s, dir) => Relational.returnedItemRevenue(s, dir),
       """SELECT c_custkey, c_name, n_name,
         |       CAST(CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) * 1000000 AS BIGINT) AS DOUBLE) / 1000000.0 AS revenue,
         |       count(*) AS n_items
@@ -1107,9 +503,8 @@ object SparkEntry {
         |WHERE l_returnflag = 'R'
         |GROUP BY 1, 2, 3
         |ORDER BY revenue DESC, c_custkey
-        |LIMIT 20""".stripMargin,
-
-    "q17_small_qty_revenue" ->
+        |LIMIT 20""".stripMargin),
+    Query("q17_small_qty_revenue", (s, dir) => Relational.smallQuantityRevenue(s, dir),
       """WITH w AS (
         |  SELECT l_extendedprice, l_quantity,
         |         avg(l_quantity) OVER (PARTITION BY l_partkey) AS avg_qty
@@ -1117,9 +512,8 @@ object SparkEntry {
         |)
         |SELECT CAST(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,6))) * 1000000 AS BIGINT) AS DOUBLE) / 1000000.0 AS total_price,
         |       count(*) AS n_items
-        |FROM w WHERE l_quantity < 0.2::DOUBLE * avg_qty""".stripMargin,
-
-    "q7_volume_shipping" ->
+        |FROM w WHERE l_quantity < 0.2::DOUBLE * avg_qty""".stripMargin),
+    Query("q7_volume_shipping", (s, dir) => Relational.volumeShipping(s, dir),
       """SELECT ns.n_name AS supp_nation, nc.n_name AS cust_nation,
         |       year(l_shipdate) AS l_year,
         |       CAST(CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) * 1000000 AS BIGINT) AS DOUBLE) / 1000000.0 AS revenue,
@@ -1135,9 +529,8 @@ object SparkEntry {
         |  AND ns.n_name != nc.n_name
         |  AND l_shipdate >= TIMESTAMP '1995-01-01 00:00:00'
         |  AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
-        |GROUP BY 1, 2, 3""".stripMargin,
-
-    "q8_market_share" ->
+        |GROUP BY 1, 2, 3""".stripMargin),
+    Query("q8_market_share", (s, dir) => Relational.marketShare(s, dir),
       """WITH a AS (
         |  SELECT year(o_orderdate) AS o_year,
         |    CAST(CAST(sum(CASE WHEN ns.n_name = 'NATION_3'
@@ -1157,9 +550,8 @@ object SparkEntry {
         |)
         |SELECT o_year, (nation_revenue / total_revenue) AS mkt_share,
         |       nation_revenue, total_revenue
-        |FROM a""".stripMargin,
-
-    "q9_product_profit" ->
+        |FROM a""".stripMargin),
+    Query("q9_product_profit", (s, dir) => Relational.productProfit(s, dir),
       """SELECT n_name AS nation, year(o_orderdate) AS o_year,
         |       CAST(CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6)) -
         |                CAST(p_retailprice * l_quantity * 0.5 AS DECIMAL(18,6))) * 1000000 AS BIGINT) AS DOUBLE) / 1000000.0 AS profit,
@@ -1170,9 +562,8 @@ object SparkEntry {
         |JOIN supplier ON l_suppkey = s_suppkey
         |JOIN nation ON s_nationkey = n_nationkey
         |WHERE p_name LIKE '%widget%'
-        |GROUP BY 1, 2""".stripMargin,
-
-    "q12_priority_lines" ->
+        |GROUP BY 1, 2""".stripMargin),
+    Query("q12_priority_lines", (s, dir) => Relational.priorityLineCounts(s, dir),
       """SELECT l_linestatus,
         |       CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
         |                THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
@@ -1181,9 +572,89 @@ object SparkEntry {
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         |WHERE l_shipdate >= TIMESTAMP '1995-01-01 00:00:00'
         |  AND l_shipdate < TIMESTAMP '1996-01-01 00:00:00'
-        |GROUP BY 1""".stripMargin,
-
-    "q2_min_cost_supplier" ->
+        |GROUP BY 1""".stripMargin),
+    Query("q13_order_distribution", (s, dir) => Relational.customerOrderDistribution(s, dir),
+      """WITH c AS (
+        |  SELECT c_custkey, count(o_orderkey) AS c_count
+        |  FROM customer LEFT OUTER JOIN orders
+        |    ON c_custkey = o_custkey AND o_orderstatus != 'P'
+        |  GROUP BY 1
+        |)
+        |SELECT c_count, count(*) AS custdist FROM c GROUP BY 1""".stripMargin),
+    Query("q14_promo_share", (s, dir) => Relational.promoRevenueShare(s, dir),
+      """WITH a AS (
+        |  SELECT
+        |    CAST(CAST(sum(CASE WHEN p_type = 'PROMO'
+        |      THEN CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))
+        |      ELSE CAST(0 AS DECIMAL(18,6)) END) * 1000000 AS BIGINT) AS DOUBLE) / 1000000.0 AS promo_revenue,
+        |    CAST(CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) * 1000000 AS BIGINT) AS DOUBLE) / 1000000.0 AS total_revenue
+        |  FROM lineitem JOIN part ON l_partkey = p_partkey
+        |  WHERE l_shipdate >= TIMESTAMP '1995-09-01 00:00:00'
+        |    AND l_shipdate < TIMESTAMP '1995-10-01 00:00:00'
+        |)
+        |SELECT (100.0::DOUBLE * promo_revenue / total_revenue) AS promo_pct,
+        |       promo_revenue, total_revenue
+        |FROM a""".stripMargin),
+    Query("q15_top_supplier", (s, dir) => Relational.topSupplier(s, dir),
+      """WITH rev AS (
+        |  SELECT l_suppkey,
+        |         sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS total_revenue_dec
+        |  FROM lineitem
+        |  WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
+        |    AND l_shipdate < TIMESTAMP '1996-04-01 00:00:00'
+        |  GROUP BY 1
+        |)
+        |SELECT s_suppkey, s_name, CAST(CAST(total_revenue_dec * 1000000 AS BIGINT) AS DOUBLE) / 1000000.0 AS total_revenue
+        |FROM rev JOIN supplier ON l_suppkey = s_suppkey
+        |WHERE total_revenue_dec = (SELECT max(total_revenue_dec) FROM rev)""".stripMargin),
+    Query("q18_large_volume", (s, dir) => Relational.largeVolumeOrders(s, dir),
+      """WITH big AS (
+        |  SELECT l_orderkey, sum(l_quantity) AS total_qty
+        |  FROM lineitem GROUP BY 1 HAVING sum(l_quantity) > 300
+        |)
+        |SELECT c_custkey, c_name, o_orderkey, o_orderdate, o_totalprice, total_qty
+        |FROM orders
+        |JOIN big ON o_orderkey = l_orderkey
+        |JOIN customer ON o_custkey = c_custkey
+        |ORDER BY o_totalprice DESC, o_orderkey
+        |LIMIT 20""".stripMargin),
+    Query("q19_branded_revenue", (s, dir) => Relational.brandedRevenue(s, dir),
+      """SELECT CAST(CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) * 1000000 AS BIGINT) AS DOUBLE) / 1000000.0 AS revenue,
+        |       count(*) AS n_items
+        |FROM lineitem JOIN part ON l_partkey = p_partkey
+        |WHERE (p_brand = 'Brand#12' AND l_quantity BETWEEN 1 AND 11 AND p_size BETWEEN 1 AND 5)
+        |   OR (p_brand = 'Brand#23' AND l_quantity BETWEEN 10 AND 20 AND p_size BETWEEN 1 AND 10)
+        |   OR (p_brand = 'Brand#34' AND l_quantity BETWEEN 20 AND 30 AND p_size BETWEEN 1 AND 15)""".stripMargin),
+    Query("q21_sole_returning_supplier", (s, dir) => Relational.soleReturningSupplier(s, dir),
+      // Decorrelated form of the EXISTS/NOT-EXISTS pair: per-order distinct
+      // supplier counts (all lines vs returned lines) replace both
+      // correlated subqueries — identical result, one scan.
+      """WITH per_order AS (
+        |  SELECT l_orderkey,
+        |         count(DISTINCT l_suppkey) AS n_supp,
+        |         count(DISTINCT CASE WHEN l_returnflag = 'R' THEN l_suppkey END) AS n_supp_r
+        |  FROM lineitem GROUP BY 1
+        |), r_lines AS (
+        |  SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem WHERE l_returnflag = 'R'
+        |)
+        |SELECT s_name, count(*) AS numwait
+        |FROM r_lines
+        |JOIN per_order USING (l_orderkey)
+        |JOIN supplier ON l_suppkey = s_suppkey
+        |WHERE n_supp >= 2 AND n_supp_r = 1
+        |  AND EXISTS (SELECT 1 FROM orders
+        |              WHERE o_orderkey = l_orderkey AND o_orderstatus = 'F')
+        |GROUP BY 1
+        |ORDER BY numwait DESC, s_name
+        |LIMIT 20""".stripMargin),
+    Query("q22_idle_balance", (s, dir) => Relational.idleCustomerBalance(s, dir),
+      """SELECT c_nationkey AS cntry, count(*) AS numcust,
+        |       CAST(CAST(sum(CAST(c_acctbal AS DECIMAL(18,6))) * 1000000 AS BIGINT) AS DOUBLE) / 1000000.0 AS totacctbal
+        |FROM customer c
+        |WHERE c_acctbal > (SELECT avg(c_acctbal) FROM customer WHERE c_acctbal > 0.0)
+        |  AND NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
+        |GROUP BY 1""".stripMargin),
+    Query("q2_min_cost_supplier", (s, dir) => Relational.minCostSupplier(s, dir),
       """WITH ps AS (
         |  SELECT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey,
         |         min(l_extendedprice / l_quantity) AS ps_supplycost
@@ -1205,9 +676,8 @@ object SparkEntry {
         |      AND n2.n_regionkey = r2.r_regionkey
         |      AND r2.r_name = 'EUROPE')
         |ORDER BY s_acctbal DESC, n_name, s_name, p_partkey
-        |LIMIT 100""".stripMargin,
-
-    "q11_important_stock" ->
+        |LIMIT 100""".stripMargin),
+    Query("q11_important_stock", (s, dir) => Relational.importantStockValue(s, dir),
       """WITH vals AS (
         |  SELECT l_partkey,
         |         sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS value_dec
@@ -1219,9 +689,8 @@ object SparkEntry {
         |)
         |SELECT l_partkey, CAST(CAST(value_dec * 1000000 AS BIGINT) AS DOUBLE) / 1000000.0 AS part_value
         |FROM vals
-        |WHERE value_dec > (SELECT sum(value_dec) FROM vals) * 0.001""".stripMargin,
-
-    "q16_supplier_count" ->
+        |WHERE value_dec > (SELECT sum(value_dec) FROM vals) * 0.001""".stripMargin),
+    Query("q16_supplier_count", (s, dir) => Relational.supplierCountByPart(s, dir),
       """WITH ps AS (
         |  SELECT DISTINCT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey
         |  FROM lineitem
@@ -1233,9 +702,8 @@ object SparkEntry {
         |  AND p_size IN (1, 4, 9, 14, 23, 36, 45, 49)
         |  AND ps_suppkey NOT IN (
         |    SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-        |GROUP BY 1, 2, 3""".stripMargin,
-
-    "q20_excess_stock" ->
+        |GROUP BY 1, 2, 3""".stripMargin),
+    Query("q20_excess_stock", (s, dir) => Relational.excessStockSuppliers(s, dir),
       """SELECT s_suppkey, s_name, s_acctbal
         |FROM supplier JOIN nation ON s_nationkey = n_nationkey
         |WHERE n_name = 'NATION_3'
@@ -1247,116 +715,25 @@ object SparkEntry {
         |                     AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
         |               THEN CAST(l_quantity AS DECIMAL(18,6))
         |               ELSE CAST(0 AS DECIMAL(18,6)) END)
-        |         > sum(CAST(l_quantity AS DECIMAL(18,6))) * 0.5)""".stripMargin,
-
-    "q13_order_distribution" ->
-      """WITH c AS (
-        |  SELECT c_custkey, count(o_orderkey) AS c_count
-        |  FROM customer LEFT OUTER JOIN orders
-        |    ON c_custkey = o_custkey AND o_orderstatus != 'P'
-        |  GROUP BY 1
-        |)
-        |SELECT c_count, count(*) AS custdist FROM c GROUP BY 1""".stripMargin,
-
-    "q14_promo_share" ->
-      """WITH a AS (
-        |  SELECT
-        |    CAST(CAST(sum(CASE WHEN p_type = 'PROMO'
-        |      THEN CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))
-        |      ELSE CAST(0 AS DECIMAL(18,6)) END) * 1000000 AS BIGINT) AS DOUBLE) / 1000000.0 AS promo_revenue,
-        |    CAST(CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) * 1000000 AS BIGINT) AS DOUBLE) / 1000000.0 AS total_revenue
-        |  FROM lineitem JOIN part ON l_partkey = p_partkey
-        |  WHERE l_shipdate >= TIMESTAMP '1995-09-01 00:00:00'
-        |    AND l_shipdate < TIMESTAMP '1995-10-01 00:00:00'
-        |)
-        |SELECT (100.0::DOUBLE * promo_revenue / total_revenue) AS promo_pct,
-        |       promo_revenue, total_revenue
-        |FROM a""".stripMargin,
-
-    "q15_top_supplier" ->
-      """WITH rev AS (
-        |  SELECT l_suppkey,
-        |         sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS total_revenue_dec
-        |  FROM lineitem
-        |  WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-        |    AND l_shipdate < TIMESTAMP '1996-04-01 00:00:00'
-        |  GROUP BY 1
-        |)
-        |SELECT s_suppkey, s_name, CAST(CAST(total_revenue_dec * 1000000 AS BIGINT) AS DOUBLE) / 1000000.0 AS total_revenue
-        |FROM rev JOIN supplier ON l_suppkey = s_suppkey
-        |WHERE total_revenue_dec = (SELECT max(total_revenue_dec) FROM rev)""".stripMargin,
-
-    "q18_large_volume" ->
-      """WITH big AS (
-        |  SELECT l_orderkey, sum(l_quantity) AS total_qty
-        |  FROM lineitem GROUP BY 1 HAVING sum(l_quantity) > 300
-        |)
-        |SELECT c_custkey, c_name, o_orderkey, o_orderdate, o_totalprice, total_qty
-        |FROM orders
-        |JOIN big ON o_orderkey = l_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |ORDER BY o_totalprice DESC, o_orderkey
-        |LIMIT 20""".stripMargin,
-
-    "q19_branded_revenue" ->
-      """SELECT CAST(CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) * 1000000 AS BIGINT) AS DOUBLE) / 1000000.0 AS revenue,
-        |       count(*) AS n_items
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE (p_brand = 'Brand#12' AND l_quantity BETWEEN 1 AND 11 AND p_size BETWEEN 1 AND 5)
-        |   OR (p_brand = 'Brand#23' AND l_quantity BETWEEN 10 AND 20 AND p_size BETWEEN 1 AND 10)
-        |   OR (p_brand = 'Brand#34' AND l_quantity BETWEEN 20 AND 30 AND p_size BETWEEN 1 AND 15)""".stripMargin,
-
-    // Decorrelated form of the EXISTS/NOT-EXISTS pair: per-order distinct
-    // supplier counts (all lines vs returned lines) replace both
-    // correlated subqueries — identical result, one scan.
-    "q21_sole_returning_supplier" ->
-      """WITH per_order AS (
-        |  SELECT l_orderkey,
-        |         count(DISTINCT l_suppkey) AS n_supp,
-        |         count(DISTINCT CASE WHEN l_returnflag = 'R' THEN l_suppkey END) AS n_supp_r
-        |  FROM lineitem GROUP BY 1
-        |), r_lines AS (
-        |  SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem WHERE l_returnflag = 'R'
-        |)
-        |SELECT s_name, count(*) AS numwait
-        |FROM r_lines
-        |JOIN per_order USING (l_orderkey)
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |WHERE n_supp >= 2 AND n_supp_r = 1
-        |  AND EXISTS (SELECT 1 FROM orders
-        |              WHERE o_orderkey = l_orderkey AND o_orderstatus = 'F')
-        |GROUP BY 1
-        |ORDER BY numwait DESC, s_name
-        |LIMIT 20""".stripMargin,
-
-    "q22_idle_balance" ->
-      """SELECT c_nationkey AS cntry, count(*) AS numcust,
-        |       CAST(CAST(sum(CAST(c_acctbal AS DECIMAL(18,6))) * 1000000 AS BIGINT) AS DOUBLE) / 1000000.0 AS totacctbal
-        |FROM customer c
-        |WHERE c_acctbal > (SELECT avg(c_acctbal) FROM customer WHERE c_acctbal > 0.0)
-        |  AND NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-        |GROUP BY 1""".stripMargin,
-
-    // HLL sketches aren't cross-engine comparable; the oracle asserts the
-    // exact columns plus the 3·rsd accuracy envelope as constant-1 flags
-    // (Spark emits 0 if its estimate drifts out → hash goes red).
-    "a_approx_distinct" ->
+        |         > sum(CAST(l_quantity AS DECIMAL(18,6))) * 0.5)""".stripMargin),
+    Query("a_distinct_counts", (s, dir) => Relational.distinctCounts(s, dir),
+      """SELECT l_returnflag,
+        |       count(DISTINCT l_suppkey) AS n_supp,
+        |       count(DISTINCT l_partkey) AS n_part,
+        |       count(*) AS n_rows
+        |FROM lineitem GROUP BY 1""".stripMargin),
+    Query("a_approx_distinct", (s, dir) => Relational.approxDistinctChecked(s, dir),
+      // HLL sketches aren't cross-engine comparable; the oracle asserts the
+      // exact columns plus the 3·rsd accuracy envelope as constant-1 flags
+      // (Spark emits 0 if its estimate drifts out → hash goes red).
       """SELECT l_returnflag,
         |       count(DISTINCT l_suppkey) AS n_supp,
         |       count(DISTINCT l_partkey) AS n_part,
         |       count(*) AS n_rows,
         |       1 AS supp_within_3rsd,
         |       1 AS part_within_3rsd
-        |FROM lineitem GROUP BY 1""".stripMargin,
-
-    "a_distinct_counts" ->
-      """SELECT l_returnflag,
-        |       count(DISTINCT l_suppkey) AS n_supp,
-        |       count(DISTINCT l_partkey) AS n_part,
-        |       count(*) AS n_rows
-        |FROM lineitem GROUP BY 1""".stripMargin,
-
-    "w_order_ranks" ->
+        |FROM lineitem GROUP BY 1""".stripMargin),
+    Query("w_order_ranks", (s, dir) => Relational.orderRanks(s, dir),
       """SELECT * FROM (
         |  SELECT o_custkey, o_orderkey, o_orderdate, o_totalprice,
         |         row_number() OVER w AS rn,
@@ -1364,71 +741,25 @@ object SparkEntry {
         |         lead(o_totalprice, 1) OVER w AS next_price
         |  FROM orders
         |  WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-        |) WHERE rn <= 3""".stripMargin,
-
-    "a_rollup_summary" ->
+        |) WHERE rn <= 3""".stripMargin),
+    Query("a_rollup_summary", (s, dir) => Relational.rollupSummary(s, dir),
       """SELECT l_returnflag, l_linestatus,
         |       CAST(CAST(sum(CAST(l_quantity AS DECIMAL(18,6))) * 1000000 AS BIGINT) AS DOUBLE) / 1000000.0 AS sum_qty, count(*) AS n_rows
         |FROM lineitem
-        |GROUP BY ROLLUP (l_returnflag, l_linestatus)""".stripMargin,
-
-    "t_token_stats" ->
-      """WITH w AS (SELECT doc_id, text, string_split(text, ' ') AS words FROM documents)
-        |SELECT doc_id,
-        |  len(words) AS n_tokens,
-        |  len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]')) AS n_subtokens,
-        |  len(list_distinct(words)) AS n_distinct,
-        |  (CAST(len(list_distinct(words)) AS DOUBLE) / CAST(len(words) AS DOUBLE)) AS ttr,
-        |  (CAST(length(text) - (len(words) - 1) AS DOUBLE) / CAST(len(words) AS DOUBLE)) AS avg_token_len
-        |FROM w""".stripMargin,
-
-    "t_lang_id" -> TextOps.langIdSql,
-    "t_quality_score" -> TextOps.qualitySql,
-
-    "t_fingerprint" -> TextOps.fingerprintSql,
-    "t_pii_redact" -> TextOps.piiRedactSql,
-    "t_vocab_topk" -> TextOps.vocabTopKSql(),
-    "t_freq_spectrum" -> TextOps.freqSpectrumSql,
-    "t_bigram_topk" -> TextOps.bigramTopKSql(),
-    "t_repetition" -> TextOps.repetitionSql,
-    "t_chunking" -> TextOps.chunkDocsSql(),
-
-    "q4_returned_priority" ->
-      """SELECT o_orderpriority, count(*) AS n_orders
-        |FROM orders o
-        |WHERE EXISTS (SELECT 1 FROM lineitem l
-        |              WHERE l.l_orderkey = o.o_orderkey AND l.l_returnflag = 'R')
-        |GROUP BY 1""".stripMargin,
-
-    "q6_forecast_revenue" ->
-      """SELECT CAST(CAST(sum(CAST(l_extendedprice * l_discount AS DECIMAL(18,6))) * 1000000 AS BIGINT) AS DOUBLE) / 1000000.0 AS revenue,
-        |       count(*) AS n_items
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1994-01-01 00:00:00'
-        |  AND l_shipdate < TIMESTAMP '1996-01-01 00:00:00'
-        |  AND l_discount BETWEEN 0.02 AND 0.09
-        |  AND l_quantity < 24""".stripMargin,
-    "d_contamination" -> TextOps.contaminationSql(),
-
-    "d_exact_dedup" ->
-      """SELECT md5(text) AS fp, min(doc_id) AS canonical_doc, count(*) AS n_docs
-        |FROM documents GROUP BY 1""".stripMargin,
-
-    "d_minhash_sig" -> Dedup.minhashSigSql,
-    "d_minhash_pairs" -> Dedup.minhashPairsSql,
-    "d_threshold_curve" -> Dedup.thresholdCurveSql(),
-    "d_band_tuning" -> Dedup.bandTuningSql(),
-    "g_modularity" -> Dedup.modularitySql(edgeBudget = 2000000L),
-    "d_dup_by_source" -> Dedup.dupBySourceSql,
-    "d_simhash_sig" -> Dedup.simhashSigSql,
-    "d_simhash_pairs" -> Dedup.simhashPairsSql,
-
-    "a_cube_summary" ->
+        |GROUP BY ROLLUP (l_returnflag, l_linestatus)""".stripMargin),
+    Query("a_cube_summary", (s, dir) => Relational.cubeSummary(s, dir),
       """SELECT l_returnflag, l_linestatus,
         |       CAST(CAST(sum(CAST(l_quantity AS DECIMAL(18,6))) * 1000000 AS BIGINT) AS DOUBLE) / 1000000.0 AS sum_qty, count(*) AS n_rows
-        |FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)""".stripMargin,
-
-    "j_range_binned" ->
+        |FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)""".stripMargin),
+    Query("j_range_binned", (s, dir) => {
+      val t = trades(s, dir)
+      val purchases = t.filter(col("symbol") === "purchase")
+        .select("event_id", "user_id", "timestamp", "price")
+      val clicks = t.filter(col("symbol") === "click")
+        .select("user_id", "timestamp")
+      AsOfJoin.rangeCountJoin(purchases, clicks, "user_id", "timestamp",
+        windowSec = 3600L, binSec = 900L)
+    },
       s"""$T,
          |p AS (SELECT event_id, user_id, "timestamp", price FROM trades
          |      WHERE symbol = 'purchase'),
@@ -1439,139 +770,123 @@ object SparkEntry {
          |FROM p LEFT JOIN c ON c.user_id = p.user_id
          |  AND c.cts > p."timestamp" - INTERVAL 3600 SECOND
          |  AND c.cts <= p."timestamp"
-         |GROUP BY p.event_id, p.user_id, p."timestamp", p.price""".stripMargin,
-
-    "d_embedding_dup" -> Dedup.embeddingDupSql,
-    "d_cos_threshold_curve" -> Dedup.cosThresholdCurveSql(),
-    "d_segment_dedup" -> TextOps.segmentDedupSql(),
-    "d_semantic_dup" -> Similarity.semanticDupSql(),
-    "t_df_rarity" -> TextOps.dfRaritySql(),
-    "t_bpe_train" -> TextOps.bpeTrainSql(),
-    "t_bpe_encode" -> TextOps.bpeEncodeSql(),
-    "t_domain_quota" -> TextOps.domainQuotaSql(),
-    "d_cluster_best" -> Dedup.clusterBestSql,
-    "t_tfidf_topk" -> TextOps.tfidfTopKSql(),
-    "g_pagerank" -> Dedup.similarityRankSql(),
-    "g_contamination_hops" -> Dedup.contaminationHopsSql(),
-    "mv_incremental" -> Incremental.incrementalAggSql,
-    "e_funnel" -> EventAnalytics.funnelSql(),
-    "e_retention" -> EventAnalytics.retentionSql,
-    "e_transitions" -> EventAnalytics.transitionMatrixSql,
-    "mv_incremental_distinct" -> Incremental.incrementalDistinctSql,
-    "mv_join_incremental" -> Incremental.incrementalJoinAggSql,
-    "mv_minmax_retract" -> Incremental.retractableMinMaxSql,
-    "mv_median_retract" -> Incremental.retractableMedianSql,
-    "mv_topk_retract" -> Incremental.retractableTopKSql,
-    "t_importance_weights" -> TextOps.importanceWeightsSql(),
-    "t_ngram_novelty" -> TextOps.ngramNoveltySql(),
-    "p_token_budget" -> Pipeline.tokenBudgetSelectSql(),
-    "p_mixture_epochs" -> Pipeline.mixtureEpochsSql(),
-    "p_dup_quality_profile" -> Pipeline.dupQualityProfileSql,
-    "p_anneal_schedule" -> Pipeline.annealScheduleSql(),
-    "p_dedup_savings" -> Pipeline.dedupSavingsSql,
-    "t_langid_confusion" -> TextOps.langIdConfusionSql,
-    "t_bpe_fertility" -> TextOps.bpeFertilitySql(),
-    "w7_gap_detect" ->
+         |GROUP BY p.event_id, p.user_id, p."timestamp", p.price""".stripMargin),
+    // -- scale-technique tier (T15, skew, co-located joins) --------------
+    Query("t15_session_windows", (s, dir) => Scale.sessionize(trades(s, dir)),
+      s"""$T,
+         |m AS (
+         |  SELECT user_id, "timestamp", usd_volume,
+         |         CASE WHEN "timestamp" - lag("timestamp") OVER (
+         |             PARTITION BY user_id ORDER BY "timestamp")
+         |           <= INTERVAL 5 MINUTE THEN 0 ELSE 1 END AS new_s
+         |  FROM trades
+         |), s AS (
+         |  SELECT user_id, "timestamp", usd_volume,
+         |         sum(new_s) OVER (PARTITION BY user_id ORDER BY "timestamp"
+         |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
+         |  FROM m
+         |)
+         |SELECT user_id,
+         |       min("timestamp") AS session_start,
+         |       max("timestamp") + INTERVAL 5 MINUTE AS session_end,
+         |       count(*) AS n_events,
+         |       CAST(CAST(sum(CAST(usd_volume AS DECIMAL(18,6))) * 1000000 AS BIGINT) AS DOUBLE) / 1000000.0 AS session_usd
+         |FROM s GROUP BY user_id, sid""".stripMargin),
+    Query("skew_salted_agg", (s, dir) => Scale.saltedVolumeBySymbol(trades(s, dir)),
       s"""$T
-         |${TradeOps.gapDetectSql()}""".stripMargin,
-    "k10_compaction" ->
+         |SELECT symbol,
+         |       CAST(CAST(sum(CAST(volume AS DECIMAL(18,6))) * 1000000 AS BIGINT) AS DOUBLE) / 1000000.0 AS total_volume,
+         |       count(*) AS n_trades,
+         |       min(price) AS min_price,
+         |       max(price) AS max_price
+         |FROM trades GROUP BY symbol""".stripMargin),
+    Query("b_bucketed_join", (s, dir) => Scale.bucketedOrderRevenue(s, dir),
+      """SELECT c.c_custkey, c.c_name,
+        |       count(*) AS n_orders,
+        |       (CAST(CAST(sum(CAST(o.o_totalprice AS DECIMAL(18,6))) * 1000000 AS BIGINT) AS DOUBLE) / 1000000.0) AS revenue
+        |FROM customer c JOIN orders o ON c.c_custkey = o.o_custkey
+        |GROUP BY 1, 2""".stripMargin),
+    Query("k9_zorder_roundtrip", (s, dir) => Scale.zorderRoundTrip(s, trades(s, dir)),
+      s"$T,\n${Scale.zorderSql()}"),
+    // -- training-data pipeline tier (SURVEY.md §7.5) --------------------
+    Query("t_token_stats", (s, dir) => TextOps.tokenStats(Tables.load(s, dir, "documents")),
+      """WITH w AS (SELECT doc_id, text, string_split(text, ' ') AS words FROM documents)
+        |SELECT doc_id,
+        |  len(words) AS n_tokens,
+        |  len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]')) AS n_subtokens,
+        |  len(list_distinct(words)) AS n_distinct,
+        |  (CAST(len(list_distinct(words)) AS DOUBLE) / CAST(len(words) AS DOUBLE)) AS ttr,
+        |  (CAST(length(text) - (len(words) - 1) AS DOUBLE) / CAST(len(words) AS DOUBLE)) AS avg_token_len
+        |FROM w""".stripMargin),
+    Query("t_lang_id", (s, dir) => TextOps.langId(Tables.load(s, dir, "documents")),
+      TextOps.langIdSql),
+    Query("t_quality_score", (s, dir) => TextOps.qualityScore(Tables.load(s, dir, "documents")),
+      TextOps.qualitySql),
+    Query("t_fingerprint", (s, dir) => TextOps.fingerprint(Tables.load(s, dir, "documents")),
+      TextOps.fingerprintSql),
+    Query("t_repetition", (s, dir) => TextOps.repetitionStats(Tables.load(s, dir, "documents")),
+      TextOps.repetitionSql),
+    Query("t_chunking", (s, dir) => TextOps.chunkDocs(Tables.load(s, dir, "documents")),
+      TextOps.chunkDocsSql()),
+    Query("t_pii_redact", (s, dir) => TextOps.piiRedact(Tables.load(s, dir, "documents")),
+      TextOps.piiRedactSql),
+    Query("t_vocab_topk", (s, dir) => TextOps.vocabTopK(Tables.load(s, dir, "documents")),
+      TextOps.vocabTopKSql()),
+    Query("t_freq_spectrum", (s, dir) => TextOps.freqSpectrum(Tables.load(s, dir, "documents")),
+      TextOps.freqSpectrumSql),
+    Query("t_df_rarity", (s, dir) => TextOps.dfRarity(Tables.load(s, dir, "documents")),
+      TextOps.dfRaritySql()),
+    Query("t_bpe_train", (s, dir) => TextOps.bpeTrain(Tables.load(s, dir, "documents")),
+      TextOps.bpeTrainSql()),
+    Query("t_bpe_encode", (s, dir) => TextOps.bpeEncode(Tables.load(s, dir, "documents")),
+      TextOps.bpeEncodeSql()),
+    Query("t_domain_quota", (s, dir) => TextOps.domainQuota(Tables.load(s, dir, "documents")),
+      TextOps.domainQuotaSql()),
+    Query("d_cluster_best", (s, dir) => Dedup.clusterBest(Tables.load(s, dir, "documents")),
+      Dedup.clusterBestSql),
+    Query("t_tfidf_topk", (s, dir) => TextOps.tfidfTopK(Tables.load(s, dir, "documents")),
+      TextOps.tfidfTopKSql()),
+    Query("k10_compaction", (s, dir) => TradeOps.compactRoundTrip(s, trades(s, dir)),
       s"""$T
          |SELECT event_id, symbol, "timestamp", price, volume
-         |FROM trades""".stripMargin,
-    "d_dedup_resolve" -> Dedup.resolveSql,
-    "p_corpus_clean" -> Pipeline.corpusCleanSql,
-    "p_pretrain_manifest" -> Pipeline.pretrainManifestSql,
-    "p_curation_manifest" -> Pipeline.curationManifestSql(),
-    "p2_dead_letter" ->
-      s"""$T
-         |SELECT event_id,
-         |       CASE WHEN event_id % 100 = 0 THEN 'quarantined'
-         |            ELSE 'ok' END AS status,
-         |       CASE WHEN event_id % 100 = 0
-         |            THEN '{corrupt:' || CAST(event_id AS VARCHAR)
-         |            ELSE NULL END AS raw_payload,
-         |       CASE WHEN event_id % 100 = 0 THEN NULL
-         |            ELSE symbol END AS symbol,
-         |       CASE WHEN event_id % 100 = 0 THEN NULL
-         |            ELSE price END AS price
-         |FROM trades""".stripMargin,
-    "a_hll_merge" ->
-      """SELECT CAST(count(DISTINCT l_returnflag) AS BIGINT) AS n_sketches,
-        |       CAST(count(DISTINCT l_suppkey) AS BIGINT) AS exact_supp,
-        |       1 AS within_5pct
-        |FROM lineitem""".stripMargin,
-    "a28_hll_intersect" ->
-      """SELECT
-        |  CAST((SELECT count(DISTINCT l_suppkey) FROM lineitem
-        |        WHERE l_returnflag = 'R') AS BIGINT) AS exact_a,
-        |  CAST((SELECT count(DISTINCT l_suppkey) FROM lineitem
-        |        WHERE l_returnflag = 'A') AS BIGINT) AS exact_b,
-        |  CAST((SELECT count(*) FROM (
-        |          SELECT l_suppkey FROM lineitem WHERE l_returnflag = 'R'
-        |          INTERSECT
-        |          SELECT l_suppkey FROM lineitem WHERE l_returnflag = 'A'))
-        |        AS BIGINT) AS exact_both,
-        |  1 AS within_env""".stripMargin,
-    "v_ann_ivf" -> Similarity.annIvfSql(),
-    "v_ivf_recall" -> Similarity.ivfRecallSql(),
-    "a27_cms_topk" -> Relational.cmsTopKSql(),
-    "p_leakage_split" -> Pipeline.leakageSafeSplitSql(),
-    "d_substring_dup" -> TextOps.substringDupSql(),
-    "v_mrl_recall" -> Similarity.mrlRecallSql(),
-    "v_int8_recall" -> Similarity.int8RecallSql(),
-    "v_hamming_topk" -> Similarity.hammingTopKSql(),
-    "v_dim_profile" -> Similarity.dimProfileSql(),
-    "v_knn_graph" -> Similarity.knnGraphSql(),
-    "v_diversity_sample" -> Similarity.diversitySampleSql(),
-    "p_dedup_cascade" -> Pipeline.dedupCascadeSql,
-    "w_vwma" ->
-      s"""$T
-         |${TradeOps.vwmaSql()}""".stripMargin,
-    "a_gini" ->
-      s"""$T
-         |${TradeOps.giniActivitySql}""".stripMargin,
-    "d_minhash_est_error" -> Dedup.minhashEstErrorSql(),
-    "v_pca_power" -> Similarity.pcaPowerSql(),
-    "v_ood_topk" -> Similarity.oodTopKSql(),
-    "m_payload_dedup" -> Multimodal.payloadDedupSql,
-    "p_corpus_map" -> Pipeline.corpusMapSql,
-    "a_runs_test" ->
-      s"""$T
-         |${TradeOps.runsTestSql}""".stripMargin,
-    "d_edit_distance" -> Dedup.editDistanceSql(),
-    "v_cluster_radius" -> Similarity.clusterRadiusSql(),
-    "v_norm_hist" -> Similarity.normHistSql,
-    "d_prefix_dup" -> Dedup.prefixDupSql(),
-    "t_charclass_profile" -> TextOps.charClassProfileSql,
-    "g_assortativity" -> Dedup.similarityAssortativitySql(),
-    "k16_partition_evolution" ->
-      s"""$T
-         |${TradeOps.partitionEvolutionSql}""".stripMargin,
-    "t_length_outliers" -> TextOps.lengthOutliersSql,
-    "v_knn_graph_recall" -> Similarity.knnGraphRecallSql(),
-    "w_ichimoku" ->
-      s"""$T
-         |${TradeOps.ichimokuSql()}""".stripMargin,
-    "p_shard_plan" -> Pipeline.shardPlanSql(),
-    "v_hamming_recall" -> Similarity.hammingRecallSql(),
-    "w_aroon" ->
-      s"""$T
-         |${TradeOps.aroonSql()}""".stripMargin,
-    "e_burst_detect" -> EventAnalytics.burstDetectSql,
-    "g_clustering_coeff" -> Dedup.similarityLocalClusteringSql(),
-    "v_recall_curve" -> Similarity.ivfRecallCurveSql(),
-    "v_pq_codes" -> Similarity.pqCodesSql(),
-    "v_pq_adc" -> Similarity.pqAdcSql(),
-    "v_ivfpq_adc" -> Similarity.ivfPqAdcSql(),
-    "v_kmeans" -> Similarity.kmeansSql(),
-    "v_ann_lsh" -> Similarity.annLshSql(),
-    "v_lsh_ann_recall" -> Similarity.lshAnnRecallSql(),
-    "v_ann_multiprobe" -> Similarity.annLshMultiprobeSql(),
-    "v_multiprobe_recall" -> Similarity.multiprobeRecallSql(),
-    "v_label_outliers" -> Similarity.labelOutliersSql(),
-    "v_centroid_shift" -> Similarity.centroidShiftSql(),
-
-    "d_ngram_jaccard" ->
+         |FROM trades""".stripMargin),
+    Query("q4_returned_priority", (s, dir) => Relational.returnedPriorityOrders(s, dir),
+      """SELECT o_orderpriority, count(*) AS n_orders
+        |FROM orders o
+        |WHERE EXISTS (SELECT 1 FROM lineitem l
+        |              WHERE l.l_orderkey = o.o_orderkey AND l.l_returnflag = 'R')
+        |GROUP BY 1""".stripMargin),
+    Query("q6_forecast_revenue", (s, dir) => Relational.forecastRevenue(s, dir),
+      """SELECT CAST(CAST(sum(CAST(l_extendedprice * l_discount AS DECIMAL(18,6))) * 1000000 AS BIGINT) AS DOUBLE) / 1000000.0 AS revenue,
+        |       count(*) AS n_items
+        |FROM lineitem
+        |WHERE l_shipdate >= TIMESTAMP '1994-01-01 00:00:00'
+        |  AND l_shipdate < TIMESTAMP '1996-01-01 00:00:00'
+        |  AND l_discount BETWEEN 0.02 AND 0.09
+        |  AND l_quantity < 24""".stripMargin),
+    Query("d_contamination", (s, dir) => TextOps.contamination(Tables.load(s, dir, "documents")),
+      TextOps.contaminationSql()),
+    Query("d_exact_dedup", (s, dir) => Dedup.exactDedup(Tables.load(s, dir, "documents")),
+      """SELECT md5(text) AS fp, min(doc_id) AS canonical_doc, count(*) AS n_docs
+        |FROM documents GROUP BY 1""".stripMargin),
+    Query("d_minhash_sig", (s, dir) => Dedup.minhashSignatures(Tables.load(s, dir, "documents")),
+      Dedup.minhashSigSql),
+    Query("d_minhash_pairs", (s, dir) => Dedup.minhashPairs(Tables.load(s, dir, "documents")),
+      Dedup.minhashPairsSql),
+    Query("d_threshold_curve", (s, dir) => Dedup.thresholdCurve(Tables.load(s, dir, "documents")),
+      Dedup.thresholdCurveSql()),
+    Query("d_band_tuning", (s, dir) => Dedup.bandTuning(Tables.load(s, dir, "documents")),
+      Dedup.bandTuningSql()),
+    Query("g_modularity", (s, dir) => Dedup.modularity(
+      Tables.load(s, dir, "documents"), edgeBudget = 2000000L),
+      Dedup.modularitySql(edgeBudget = 2000000L)),
+    Query("d_dup_by_source", (s, dir) => Dedup.dupBySource(Tables.load(s, dir, "documents")),
+      Dedup.dupBySourceSql),
+    Query("d_simhash_sig", (s, dir) => Dedup.simhashSignatures(Tables.load(s, dir, "documents")),
+      Dedup.simhashSigSql),
+    Query("d_simhash_pairs", (s, dir) => Dedup.simhashPairs(Tables.load(s, dir, "documents")),
+      Dedup.simhashPairsSql),
+    Query("d_ngram_jaccard", (s, dir) => Dedup.ngramJaccard(Tables.load(s, dir, "documents")),
       """WITH sh AS (
         |  SELECT doc_id, lang, source,
         |    list_distinct(list_transform(generate_series(1, len(string_split(text, ' ')) - 2),
@@ -1587,10 +902,128 @@ object SparkEntry {
         |SELECT doc_a, doc_b,
         |       (CAST(n_inter AS DOUBLE) / CAST(na + nb - n_inter AS DOUBLE)) AS jaccard
         |FROM p
-        |WHERE CAST(n_inter AS DOUBLE) / CAST(na + nb - n_inter AS DOUBLE) >= 0.1::DOUBLE""".stripMargin,
-
-    "v_hard_negatives" -> Similarity.hardNegativesSql(),
-    "v_cosine_topk" ->
+        |WHERE CAST(n_inter AS DOUBLE) / CAST(na + nb - n_inter AS DOUBLE) >= 0.1::DOUBLE""".stripMargin),
+    Query("d_embedding_dup", (s, dir) => Dedup.embeddingDup(s, dir),
+      Dedup.embeddingDupSql),
+    Query("d_cos_threshold_curve", (s, dir) => Dedup.cosThresholdCurve(s, dir),
+      Dedup.cosThresholdCurveSql()),
+    Query("d_segment_dedup", (s, dir) => TextOps.segmentDedup(Tables.load(s, dir, "documents")),
+      TextOps.segmentDedupSql()),
+    Query("d_semantic_dup", (s, dir) => Similarity.semanticDup(s, dir),
+      Similarity.semanticDupSql()),
+    Query("d_dedup_resolve", (s, dir) => Dedup.resolveDuplicates(Tables.load(s, dir, "documents")),
+      Dedup.resolveSql),
+    Query("g_pagerank", (s, dir) => {
+      val docs = Tables.load(s, dir, "documents")
+      // dupEdges is session-checkpointed; skip pageRank's duplicate pin
+      Graph.pageRank(docs.select("doc_id"), Dedup.dupEdges(docs),
+        assumeMaterialized = true)
+    },
+      Dedup.similarityRankSql()),
+    Query("g_contamination_hops", (s, dir) => {
+      val docs = Tables.load(s, dir, "documents")
+      Graph.hopDistance(
+        docs.select("doc_id"),
+        Dedup.dupEdges(docs),
+        TextOps.contamination(docs)
+          .filter(col("contaminated") === 1).select("doc_id"),
+        // dupEdges is session-checkpointed; skip the duplicate pin
+        assumeMaterialized = true)
+    },
+      Dedup.contaminationHopsSql()),
+    Query("mv_incremental", (s, dir) => Incremental.incrementalAgg(Tables.events(s, dir)),
+      Incremental.incrementalAggSql),
+    Query("e_funnel", (s, dir) => EventAnalytics.funnel(Tables.events(s, dir)),
+      EventAnalytics.funnelSql()),
+    Query("e_retention", (s, dir) => EventAnalytics.retention(Tables.events(s, dir)),
+      EventAnalytics.retentionSql),
+    Query("e_transitions", (s, dir) => EventAnalytics.transitionMatrix(Tables.events(s, dir)),
+      EventAnalytics.transitionMatrixSql),
+    Query("mv_incremental_distinct", (s, dir) => Incremental.incrementalDistinct(Tables.events(s, dir)),
+      Incremental.incrementalDistinctSql),
+    Query("mv_join_incremental", (s, dir) => Incremental.incrementalJoinAgg(
+      Tables.load(s, dir, "orders"), Tables.load(s, dir, "customer")),
+      Incremental.incrementalJoinAggSql),
+    Query("mv_minmax_retract", (s, dir) =>
+      Incremental.retractableMinMax(Tables.events(s, dir)),
+      Incremental.retractableMinMaxSql),
+    Query("mv_median_retract", (s, dir) =>
+      Incremental.retractableMedian(Tables.events(s, dir)),
+      Incremental.retractableMedianSql),
+    Query("mv_topk_retract", (s, dir) =>
+      Incremental.retractableTopK(Tables.events(s, dir)),
+      Incremental.retractableTopKSql),
+    Query("t_importance_weights", (s, dir) =>
+      TextOps.importanceWeights(Tables.load(s, dir, "documents")),
+      TextOps.importanceWeightsSql()),
+    Query("t_ngram_novelty", (s, dir) =>
+      TextOps.ngramNovelty(Tables.load(s, dir, "documents")),
+      TextOps.ngramNoveltySql()),
+    Query("p_token_budget", (s, dir) =>
+      Pipeline.tokenBudgetSelect(Tables.load(s, dir, "documents")),
+      Pipeline.tokenBudgetSelectSql()),
+    Query("p_mixture_epochs", (s, dir) =>
+      Pipeline.mixtureEpochs(Tables.load(s, dir, "documents")),
+      Pipeline.mixtureEpochsSql()),
+    Query("p_dup_quality_profile", (s, dir) =>
+      Pipeline.dupQualityProfile(Tables.load(s, dir, "documents")),
+      Pipeline.dupQualityProfileSql),
+    Query("p_anneal_schedule", (s, dir) =>
+      Pipeline.annealSchedule(Tables.load(s, dir, "documents")),
+      Pipeline.annealScheduleSql()),
+    Query("p_dedup_savings", (s, dir) =>
+      Pipeline.dedupSavings(Tables.load(s, dir, "documents")),
+      Pipeline.dedupSavingsSql),
+    Query("t_langid_confusion", (s, dir) =>
+      TextOps.langIdConfusion(Tables.load(s, dir, "documents")),
+      TextOps.langIdConfusionSql),
+    Query("t_bpe_fertility", (s, dir) =>
+      TextOps.bpeFertility(Tables.load(s, dir, "documents")),
+      TextOps.bpeFertilitySql()),
+    Query("w7_gap_detect", (s, dir) => TradeOps.gapDetect(trades(s, dir)),
+      s"""$T
+         |${TradeOps.gapDetectSql()}""".stripMargin),
+    Query("p_corpus_clean", (s, dir) => Pipeline.corpusClean(Tables.load(s, dir, "documents")),
+      Pipeline.corpusCleanSql),
+    Query("p_leakage_split", (s, dir) => Pipeline.leakageSafeSplit(Tables.load(s, dir, "documents")),
+      Pipeline.leakageSafeSplitSql()),
+    Query("p_pretrain_manifest", (s, dir) => Pipeline.pretrainManifest(Tables.load(s, dir, "documents")),
+      Pipeline.pretrainManifestSql),
+    Query("p_curation_manifest", (s, dir) => Pipeline.curationManifest(Tables.load(s, dir, "documents")),
+      Pipeline.curationManifestSql()),
+    Query("p2_dead_letter", (s, dir) => graft.ingest.Decode.deadLetterDecode(trades(s, dir)),
+      s"""$T
+         |SELECT event_id,
+         |       CASE WHEN event_id % 100 = 0 THEN 'quarantined'
+         |            ELSE 'ok' END AS status,
+         |       CASE WHEN event_id % 100 = 0
+         |            THEN '{corrupt:' || CAST(event_id AS VARCHAR)
+         |            ELSE NULL END AS raw_payload,
+         |       CASE WHEN event_id % 100 = 0 THEN NULL
+         |            ELSE symbol END AS symbol,
+         |       CASE WHEN event_id % 100 = 0 THEN NULL
+         |            ELSE price END AS price
+         |FROM trades""".stripMargin),
+    Query("a_hll_merge", (s, dir) => Relational.hllMergeDistinct(s, dir),
+      """SELECT CAST(count(DISTINCT l_returnflag) AS BIGINT) AS n_sketches,
+        |       CAST(count(DISTINCT l_suppkey) AS BIGINT) AS exact_supp,
+        |       1 AS within_5pct
+        |FROM lineitem""".stripMargin),
+    Query("a28_hll_intersect", (s, dir) => Relational.hllIntersect(s, dir),
+      """SELECT
+        |  CAST((SELECT count(DISTINCT l_suppkey) FROM lineitem
+        |        WHERE l_returnflag = 'R') AS BIGINT) AS exact_a,
+        |  CAST((SELECT count(DISTINCT l_suppkey) FROM lineitem
+        |        WHERE l_returnflag = 'A') AS BIGINT) AS exact_b,
+        |  CAST((SELECT count(*) FROM (
+        |          SELECT l_suppkey FROM lineitem WHERE l_returnflag = 'R'
+        |          INTERSECT
+        |          SELECT l_suppkey FROM lineitem WHERE l_returnflag = 'A'))
+        |        AS BIGINT) AS exact_both,
+        |  1 AS within_env""".stripMargin),
+    Query("a27_cms_topk", (s, dir) => Relational.cmsTopK(s, dir),
+      Relational.cmsTopKSql()),
+    Query("v_cosine_topk", (s, dir) => Similarity.cosineTopK(s, dir),
       """WITH n AS (
         |  SELECT vec_id, embedding::DOUBLE[] AS v,
         |         sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
@@ -1604,9 +1037,139 @@ object SparkEntry {
         |SELECT q_id, vec_id, (cos) AS cos_sim, rnk FROM (
         |  SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rnk
         |  FROM s
-        |) WHERE rnk <= 5""".stripMargin,
-
-    "m_frame_sample" ->
+        |) WHERE rnk <= 5""".stripMargin),
+    Query("v_hard_negatives", (s, dir) => Similarity.hardNegatives(s, dir),
+      Similarity.hardNegativesSql()),
+    Query("v_ann_lsh", (s, dir) => Similarity.annLsh(s, dir),
+      Similarity.annLshSql()),
+    Query("v_lsh_ann_recall", (s, dir) => Similarity.lshAnnRecall(s, dir),
+      Similarity.lshAnnRecallSql()),
+    Query("v_ann_multiprobe", (s, dir) => Similarity.annLshMultiprobe(s, dir),
+      Similarity.annLshMultiprobeSql()),
+    Query("v_multiprobe_recall", (s, dir) => Similarity.multiprobeRecall(s, dir),
+      Similarity.multiprobeRecallSql()),
+    Query("v_label_outliers", (s, dir) => Similarity.labelOutliers(s, dir),
+      Similarity.labelOutliersSql()),
+    Query("v_centroid_shift", (s, dir) => Similarity.centroidShift(s, dir),
+      Similarity.centroidShiftSql()),
+    Query("v_ann_ivf", (s, dir) => Similarity.annIvf(s, dir),
+      Similarity.annIvfSql()),
+    Query("v_ivf_recall", (s, dir) => Similarity.ivfRecall(s, dir),
+      Similarity.ivfRecallSql()),
+    Query("v_mrl_recall", (s, dir) => Similarity.mrlRecall(s, dir),
+      Similarity.mrlRecallSql()),
+    Query("v_int8_recall", (s, dir) => Similarity.int8Recall(s, dir),
+      Similarity.int8RecallSql()),
+    Query("v_hamming_topk", (s, dir) => Similarity.hammingTopK(s, dir),
+      Similarity.hammingTopKSql()),
+    Query("v_dim_profile", (s, dir) => Similarity.dimProfile(s, dir),
+      Similarity.dimProfileSql()),
+    Query("v_knn_graph", (s, dir) => Similarity.knnGraph(s, dir),
+      Similarity.knnGraphSql()),
+    Query("v_diversity_sample", (s, dir) => Similarity.diversitySample(s, dir),
+      Similarity.diversitySampleSql()),
+    Query("p_dedup_cascade", (s, dir) =>
+      Pipeline.dedupCascade(Tables.load(s, dir, "documents")),
+      Pipeline.dedupCascadeSql),
+    Query("w_vwma", (s, dir) => TradeOps.vwma(trades(s, dir)),
+      s"""$T
+         |${TradeOps.vwmaSql()}""".stripMargin),
+    Query("a_gini", (s, dir) => TradeOps.giniActivity(trades(s, dir)),
+      s"""$T
+         |${TradeOps.giniActivitySql}""".stripMargin),
+    Query("v_pca_power", (s, dir) => Similarity.pcaPower(s, dir),
+      Similarity.pcaPowerSql()),
+    Query("v_ood_topk", (s, dir) => Similarity.oodTopK(s, dir),
+      Similarity.oodTopKSql()),
+    Query("m_payload_dedup", (s, dir) =>
+      Multimodal.payloadDedup(Tables.load(s, dir, "documents")),
+      Multimodal.payloadDedupSql),
+    Query("p_corpus_map", (s, dir) =>
+      Pipeline.corpusMap(Tables.load(s, dir, "documents")),
+      Pipeline.corpusMapSql),
+    Query("a_runs_test", (s, dir) => TradeOps.runsTest(trades(s, dir)),
+      s"""$T
+         |${TradeOps.runsTestSql}""".stripMargin),
+    Query("d_edit_distance", (s, dir) =>
+      Dedup.editDistance(Tables.load(s, dir, "documents")),
+      Dedup.editDistanceSql()),
+    Query("v_cluster_radius", (s, dir) => Similarity.clusterRadius(s, dir),
+      Similarity.clusterRadiusSql()),
+    Query("v_norm_hist", (s, dir) => Similarity.normHist(s, dir),
+      Similarity.normHistSql),
+    Query("d_prefix_dup", (s, dir) =>
+      Dedup.prefixDup(Tables.load(s, dir, "documents")),
+      Dedup.prefixDupSql()),
+    Query("t_charclass_profile", (s, dir) =>
+      TextOps.charClassProfile(Tables.load(s, dir, "documents")),
+      TextOps.charClassProfileSql),
+    Query("g_assortativity", (s, dir) => {
+      val docs = Tables.load(s, dir, "documents")
+      // fifth consumer of the cached mutual-kNN similarity graph
+      Graph.assortativity(Dedup.mutualKnn(
+        Dedup.weightedDupEdges(docs, Dedup.triangleThreshold)))
+    },
+      Dedup.similarityAssortativitySql()),
+    Query("k16_partition_evolution", (s, dir) =>
+      TradeOps.partitionEvolution(s, trades(s, dir)),
+      s"""$T
+         |${TradeOps.partitionEvolutionSql}""".stripMargin),
+    Query("t_length_outliers", (s, dir) =>
+      TextOps.lengthOutliers(Tables.load(s, dir, "documents")),
+      TextOps.lengthOutliersSql),
+    Query("d_minhash_est_error", (s, dir) =>
+      Dedup.minhashEstError(Tables.load(s, dir, "documents")),
+      Dedup.minhashEstErrorSql()),
+    Query("v_knn_graph_recall", (s, dir) => Similarity.knnGraphRecall(s, dir),
+      Similarity.knnGraphRecallSql()),
+    Query("w_ichimoku", (s, dir) => TradeOps.ichimoku(trades(s, dir)),
+      s"""$T
+         |${TradeOps.ichimokuSql()}""".stripMargin),
+    Query("p_shard_plan", (s, dir) =>
+      Pipeline.shardPlan(Tables.load(s, dir, "documents")),
+      Pipeline.shardPlanSql()),
+    Query("v_hamming_recall", (s, dir) => Similarity.hammingRecall(s, dir),
+      Similarity.hammingRecallSql()),
+    Query("w_aroon", (s, dir) => TradeOps.aroon(trades(s, dir)),
+      s"""$T
+         |${TradeOps.aroonSql()}""".stripMargin),
+    Query("e_burst_detect", (s, dir) =>
+      EventAnalytics.burstDetect(Tables.events(s, dir)),
+      EventAnalytics.burstDetectSql),
+    Query("g_clustering_coeff", (s, dir) => {
+      val docs = Tables.load(s, dir, "documents")
+      // fourth consumer of the cached mutual-kNN similarity graph
+      Graph.localClustering(Dedup.mutualKnn(
+        Dedup.weightedDupEdges(docs, Dedup.triangleThreshold)))
+    },
+      Dedup.similarityLocalClusteringSql()),
+    Query("v_recall_curve", (s, dir) => Similarity.ivfRecallCurve(s, dir),
+      Similarity.ivfRecallCurveSql()),
+    Query("v_pq_codes", (s, dir) => Similarity.pqCodes(s, dir),
+      Similarity.pqCodesSql()),
+    Query("v_pq_adc", (s, dir) => Similarity.pqAdc(s, dir),
+      Similarity.pqAdcSql()),
+    Query("v_ivfpq_adc", (s, dir) => Similarity.ivfPqAdc(s, dir),
+      Similarity.ivfPqAdcSql()),
+    Query("v_kmeans", (s, dir) => Similarity.kmeansCentroids(s, dir),
+      Similarity.kmeansSql()),
+    Query("m_binary_meta", (s, dir) => Multimodal.binaryMeta(Tables.load(s, dir, "documents")),
+      """SELECT doc_id,
+        |  CAST(octet_length(encode(text)) AS INTEGER) AS byte_len,
+        |  sha256(text) AS sha256,
+        |  CAST(64 + octet_length(encode(text)) % 64 AS INTEGER) AS width,
+        |  CAST(64 + (octet_length(encode(text)) * 7) % 64 AS INTEGER) AS height,
+        |  CAST(octet_length(encode(text)) // 256 AS INTEGER) + 1 AS n_frames
+        |FROM documents""".stripMargin),
+    Query("m_decode_stub", (s, dir) => Multimodal.decodeMedia(s, Tables.load(s, dir, "documents")).toDF(),
+      """SELECT doc_id,
+        |  CAST(octet_length(encode(text)) AS INTEGER) AS byte_len,
+        |  md5(text) AS content_hash,
+        |  CAST(ord(substr(text, 1, 1)) AS INTEGER) AS first_byte,
+        |  CAST(ord(substr(text, -1, 1)) AS INTEGER) AS last_byte,
+        |  (ord(substr(text, 1, 1)) + ord(substr(text, -1, 1))) / 2.0::DOUBLE AS mean_edge
+        |FROM documents""".stripMargin),
+    Query("m_frame_sample", (s, dir) => Multimodal.frameSample(Tables.load(s, dir, "documents")),
       """WITH m AS (
         |  SELECT doc_id, sha256(text) AS sha,
         |         CAST(octet_length(encode(text)) // 256 AS INTEGER) + 1 AS n_frames
@@ -1614,9 +1177,8 @@ object SparkEntry {
         |)
         |SELECT doc_id, CAST(f AS INTEGER) AS frame_idx,
         |       md5(sha || '-' || f::VARCHAR) AS frame_fp
-        |FROM m, unnest(generate_series(0, n_frames - 1, 4)) AS t(f)""".stripMargin,
-
-    "m_resize_stub" ->
+        |FROM m, unnest(generate_series(0, n_frames - 1, 4)) AS t(f)""".stripMargin),
+    Query("m_resize_stub", (s, dir) => Multimodal.resizeStub(Tables.load(s, dir, "documents")),
       """WITH r AS (
         |  SELECT doc_id, length(text) AS orig_len,
         |         array_to_string(list_transform(
@@ -1626,18 +1188,8 @@ object SparkEntry {
         |SELECT doc_id, CAST(orig_len AS INTEGER) AS orig_len,
         |       CAST(length(resized) AS INTEGER) AS resized_len,
         |       md5(resized) AS resized_md5
-        |FROM r""".stripMargin,
-
-    "m_binary_meta" ->
-      """SELECT doc_id,
-        |  CAST(octet_length(encode(text)) AS INTEGER) AS byte_len,
-        |  sha256(text) AS sha256,
-        |  CAST(64 + octet_length(encode(text)) % 64 AS INTEGER) AS width,
-        |  CAST(64 + (octet_length(encode(text)) * 7) % 64 AS INTEGER) AS height,
-        |  CAST(octet_length(encode(text)) // 256 AS INTEGER) + 1 AS n_frames
-        |FROM documents""".stripMargin,
-
-    "m_batch_extract" ->
+        |FROM r""".stripMargin),
+    Query("m_batch_extract", (s, dir) => Multimodal.extractBatched(s, Tables.load(s, dir, "documents")).toDF(),
       """SELECT doc_id,
         |  CAST(octet_length(encode(text)) AS INT) AS byte_len,
         |  CASE WHEN length(text) = 0 THEN 0.0::DOUBLE
@@ -1646,9 +1198,9 @@ object SparkEntry {
         |            / length(text)::DOUBLE)
         |  END AS vowel_ratio,
         |  md5(text) AS content_hash
-        |FROM documents""".stripMargin,
-
-    "a_pivot_dow" -> {
+        |FROM documents""".stripMargin),
+    Query("a_pivot_dow", (s, dir) => TradeOps.pivotDayOfWeek(trades(s, dir)),
+      {
       val cols = (1 to 7).map(d =>
         s"count(*) FILTER (WHERE dayofweek(\"timestamp\") + 1 = $d) AS d$d")
         .mkString(",\n       ")
@@ -1656,9 +1208,8 @@ object SparkEntry {
          |SELECT symbol,
          |       $cols
          |FROM trades GROUP BY symbol""".stripMargin
-    },
-
-    "a_unpivot_totals" ->
+    }),
+    Query("a_unpivot_totals", (s, dir) => TradeOps.unpivotTotals(trades(s, dir)),
       s"""$T, agg AS (
          |  SELECT symbol,
          |    CAST(CAST(sum(CAST(volume AS DECIMAL(18,6))) * 1000000 AS BIGINT) AS DOUBLE) / 1000000.0 AS total_volume,
@@ -1667,76 +1218,123 @@ object SparkEntry {
          |)
          |SELECT symbol, 'total_volume' AS metric, total_volume AS value FROM agg
          |UNION ALL
-         |SELECT symbol, 'total_usd_volume' AS metric, total_usd_volume AS value FROM agg""".stripMargin,
-
-    "m_decode_stub" ->
-      """SELECT doc_id,
-        |  CAST(octet_length(encode(text)) AS INTEGER) AS byte_len,
-        |  md5(text) AS content_hash,
-        |  CAST(ord(substr(text, 1, 1)) AS INTEGER) AS first_byte,
-        |  CAST(ord(substr(text, -1, 1)) AS INTEGER) AS last_byte,
-        |  (ord(substr(text, 1, 1)) + ord(substr(text, -1, 1))) / 2.0::DOUBLE AS mean_edge
-        |FROM documents""".stripMargin,
-
-    "w8_bollinger" ->
+         |SELECT symbol, 'total_usd_volume' AS metric, total_usd_volume AS value FROM agg""".stripMargin),
+    // -- technical-indicator tier (W8-W10, A12-A13) ----------------------
+    Query("w8_bollinger", (s, dir) => TradeOps.bollinger(trades(s, dir)),
       s"""$T
-         |${TradeOps.bollingerSql()}""".stripMargin,
-    "w9_rsi" ->
+         |${TradeOps.bollingerSql()}""".stripMargin),
+    Query("w9_rsi", (s, dir) => TradeOps.rsi(trades(s, dir)),
       s"""$T
-         |${TradeOps.rsiSql()}""".stripMargin,
-    "w10_drawdown" ->
+         |${TradeOps.rsiSql()}""".stripMargin),
+    Query("w10_drawdown", (s, dir) => TradeOps.drawdown(trades(s, dir)),
       s"""$T
-         |${TradeOps.drawdownSql}""".stripMargin,
-    "a12_pairwise_corr" ->
+         |${TradeOps.drawdownSql}""".stripMargin),
+    Query("a12_pairwise_corr", (s, dir) => TradeOps.pairwiseCorr(trades(s, dir)),
       s"""$T, ${TradeOps.barsCte}
-         |${TradeOps.pairwiseCorrSql}""".stripMargin,
-    "a13_vwap" ->
+         |${TradeOps.pairwiseCorrSql}""".stripMargin),
+    Query("a13_vwap", (s, dir) => TradeOps.vwap(trades(s, dir)),
       s"""$T
-         |${TradeOps.vwapSql}""".stripMargin,
-    "t_winnow" -> TextOps.winnowSql(),
-    "t_lm_coverage" -> TextOps.lmCoverageSql(),
-    "e_cooccurrence" -> EventAnalytics.cooccurrenceSql,
-    "w11_obv" ->
+         |${TradeOps.vwapSql}""".stripMargin),
+    // -- fingerprint/coverage additions ----------------------------------
+    Query("t_winnow", (s, dir) => TextOps.winnow(Tables.load(s, dir, "documents")),
+      TextOps.winnowSql()),
+    Query("d_substring_dup", (s, dir) => TextOps.substringDup(Tables.load(s, dir, "documents")),
+      TextOps.substringDupSql()),
+    Query("t_lm_coverage", (s, dir) => TextOps.lmCoverage(Tables.load(s, dir, "documents")),
+      TextOps.lmCoverageSql()),
+    Query("e_cooccurrence", (s, dir) => EventAnalytics.cooccurrence(Tables.events(s, dir)),
+      EventAnalytics.cooccurrenceSql),
+    Query("w11_obv", (s, dir) => TradeOps.obv(trades(s, dir)),
       s"""$T
-         |${TradeOps.obvSql}""".stripMargin,
-    "f12_winsorize" ->
+         |${TradeOps.obvSql}""".stripMargin),
+    Query("f12_winsorize", (s, dir) => TradeOps.winsorize(trades(s, dir)),
       s"""$T
-         |${TradeOps.winsorizeSql()}""".stripMargin,
-    "t_boilerplate" -> TextOps.boilerplateStripSql(),
-    "w12_stochastic" ->
+         |${TradeOps.winsorizeSql()}""".stripMargin),
+    Query("t_boilerplate", (s, dir) => TextOps.boilerplateStrip(Tables.load(s, dir, "documents")),
+      TextOps.boilerplateStripSql()),
+    Query("w12_stochastic", (s, dir) => TradeOps.stochasticK(trades(s, dir)),
       s"""$T
-         |${TradeOps.stochasticKSql()}""".stripMargin,
-    "a14_atr" ->
+         |${TradeOps.stochasticKSql()}""".stripMargin),
+    Query("a14_atr", (s, dir) => TradeOps.atr(trades(s, dir)),
       s"""$T, ${TradeOps.ohlcCte}
-         |${TradeOps.atrSql()}""".stripMargin,
-    "a15_anomaly" ->
+         |${TradeOps.atrSql()}""".stripMargin),
+    Query("a15_anomaly", (s, dir) => TradeOps.anomalyFlags(trades(s, dir)),
       s"""$T
-         |${TradeOps.anomalyFlagsSql()}""".stripMargin,
-    "g_triangles" -> Dedup.similarityTrianglesSql(),
-    "g_link_pred" -> Dedup.similarityLinkPredSql(),
-    "g_labelprop" -> Dedup.similarityLabelPropSql(),
-    "skew_salted_join" -> s"$T,\n${Scale.saltedSkewJoinSql}",
-    "d_fuzzy_pairs" -> Dedup.fuzzyPairsSql(),
-    "w13_cusum" ->
+         |${TradeOps.anomalyFlagsSql()}""".stripMargin),
+    Query("g_triangles", (s, dir) => {
+      val docs = Tables.load(s, dir, "documents")
+      // session-cached weighted edge table: repeat invocations (and any
+      // other consumer at this threshold) skip the band join
+      Graph.triangles(Dedup.mutualKnn(
+        Dedup.weightedDupEdges(docs, Dedup.triangleThreshold)))
+    },
+      Dedup.similarityTrianglesSql()),
+    Query("g_link_pred", (s, dir) => {
+      val docs = Tables.load(s, dir, "documents")
+      // same session-cached weighted edges + mutual-kNN graph as
+      // g_triangles — the band join runs once for both consumers
+      Graph.linkPrediction(Dedup.mutualKnn(
+        Dedup.weightedDupEdges(docs, Dedup.triangleThreshold)))
+    },
+      Dedup.similarityLinkPredSql()),
+    Query("g_labelprop", (s, dir) => {
+      val docs = Tables.load(s, dir, "documents")
+      // third consumer of the cached mutual-kNN similarity graph
+      Graph.labelPropagation(Dedup.mutualKnn(
+        Dedup.weightedDupEdges(docs, Dedup.triangleThreshold)))
+    },
+      Dedup.similarityLabelPropSql()),
+    Query("skew_salted_join", (s, dir) => Scale.saltedSkewJoin(trades(s, dir)),
+      s"$T,\n${Scale.saltedSkewJoinSql}"),
+    Query("d_fuzzy_pairs", (s, dir) => Dedup.fuzzyPairs(Tables.load(s, dir, "documents")),
+      Dedup.fuzzyPairsSql()),
+    Query("w13_cusum", (s, dir) => TradeOps.cusum(trades(s, dir)),
       s"""$T
-         |${TradeOps.cusumSql()}""".stripMargin,
-    "a16_profile" -> TradeOps.columnProfileSql(Seq(
+         |${TradeOps.cusumSql()}""".stripMargin),
+    Query("a16_profile", (s, dir) => TradeOps.columnProfile(Tables.load(s, dir, "lineitem")),
+      TradeOps.columnProfileSql(Seq(
       "l_orderkey", "l_partkey", "l_suppkey", "l_linenumber", "l_quantity",
       "l_extendedprice", "l_discount", "l_tax", "l_returnflag",
-      "l_linestatus", "l_shipdate")),
-    "s12_gzip_roundtrip" ->
+      "l_linestatus", "l_shipdate"))),
+    Query("a17_beta", (s, dir) => TradeOps.marketBeta(trades(s, dir)),
+      s"""$T, ${TradeOps.dbarsCte}
+         |${TradeOps.marketBetaSql}""".stripMargin),
+    Query("w14_macd", (s, dir) => TradeOps.macd(trades(s, dir)),
       s"""$T
-         |SELECT event_id, symbol, "timestamp", price, volume FROM trades""".stripMargin,
-    "a19_robust" ->
+         |${TradeOps.macdSql()}""".stripMargin),
+    Query("a18_mode", (s, dir) => TradeOps.modalPrice(trades(s, dir)),
       s"""$T
-         |${TradeOps.robustStatsSql()}""".stripMargin,
-    "a29_weighted_median" ->
+         |${TradeOps.modalPriceSql}""".stripMargin),
+    Query("t_code_detect", (s, dir) => TextOps.codeDetect(Tables.load(s, dir, "documents")),
+      TextOps.codeDetectSql),
+    Query("s12_gzip_roundtrip", (s, dir) => TradeOps.gzipJsonRoundTrip(s, trades(s, dir)),
       s"""$T
-         |${TradeOps.weightedMedianSql}""".stripMargin,
-    "s13_keyset_page" ->
+         |SELECT event_id, symbol, "timestamp", price, volume FROM trades""".stripMargin),
+    Query("a19_robust", (s, dir) => TradeOps.robustStats(trades(s, dir)),
       s"""$T
-         |${TradeOps.keysetPageSql("2024-01-15 00:00:00", 0L)}""".stripMargin,
-    "j_asof_forward" ->
+         |${TradeOps.robustStatsSql()}""".stripMargin),
+    Query("a29_weighted_median", (s, dir) => TradeOps.weightedMedian(trades(s, dir)),
+      s"""$T
+         |${TradeOps.weightedMedianSql}""".stripMargin),
+    Query("a16b_profile_sketch", (s, dir) => TradeOps.columnProfileSketch(Tables.load(s, dir, "lineitem")),
+      TradeOps.columnProfileSketchSql(Seq(
+      "l_orderkey", "l_partkey", "l_suppkey", "l_linenumber", "l_quantity",
+      "l_extendedprice", "l_discount", "l_tax", "l_returnflag",
+      "l_linestatus", "l_shipdate"))),
+    Query("s13_keyset_page", (s, dir) =>
+      TradeOps.keysetPage(trades(s, dir), "2024-01-15 00:00:00", 0L),
+      s"""$T
+         |${TradeOps.keysetPageSql("2024-01-15 00:00:00", 0L)}""".stripMargin),
+    Query("j_asof_forward", (s, dir) => {
+      val t = trades(s, dir)
+      val purchases = t.filter(col("symbol") === "purchase")
+        .select("event_id", "user_id", "timestamp", "price")
+      val clicks = t.filter(col("symbol") === "click")
+        .groupBy("user_id", "timestamp")
+        .agg(max_by(col("price"), col("event_id")).as("next_click_price"))
+      AsOfJoin.asOfForward(purchases, clicks, "user_id", "timestamp",
+        "next_click_price", "next_click_price")
+    },
       s"""$T, p AS (
          |  SELECT event_id, user_id, "timestamp", price
          |  FROM trades WHERE symbol = 'purchase'
@@ -1748,186 +1346,468 @@ object SparkEntry {
          |SELECT p.event_id, p.user_id, p."timestamp", p.price,
          |       c.next_click_price
          |FROM p ASOF LEFT JOIN c
-         |  ON p.user_id = c.user_id AND c.cts >= p."timestamp"""".stripMargin,
-    "a16b_profile_sketch" -> TradeOps.columnProfileSketchSql(Seq(
-      "l_orderkey", "l_partkey", "l_suppkey", "l_linenumber", "l_quantity",
-      "l_extendedprice", "l_discount", "l_tax", "l_returnflag",
-      "l_linestatus", "l_shipdate")),
-    "a17_beta" ->
+         |  ON p.user_id = c.user_id AND c.cts >= p."timestamp"""".stripMargin),
+    Query("w15_interval_merge", (s, dir) => TradeOps.mergeIntervals(trades(s, dir)),
+      s"""$T
+         |${TradeOps.mergeIntervalsSql()}""".stripMargin),
+    Query("a20_equidepth", (s, dir) => TradeOps.equiDepthHistogram(trades(s, dir)),
+      s"""$T
+         |${TradeOps.equiDepthHistogramSql()}""".stripMargin),
+    Query("o7_walk_forward", (s, dir) => TradeOps.walkForwardSplits(trades(s, dir)),
+      s"""$T
+         |${TradeOps.walkForwardSplitsSql()}""".stripMargin),
+    Query("f13_delta_encode", (s, dir) => TradeOps.deltaEncode(trades(s, dir)),
+      s"""$T
+         |${TradeOps.deltaEncodeSql}""".stripMargin),
+    Query("e_attribution", (s, dir) =>
+      EventAnalytics.lastTouchAttribution(Tables.events(s, dir)),
+      EventAnalytics.lastTouchAttributionSql()),
+    Query("b_bloom_join", (s, dir) => Relational.bloomSemiJoinRevenue(s, dir),
+      Relational.bloomSemiJoinRevenueSql),
+    Query("k11_scd2", (s, dir) => TradeOps.scd2Build(trades(s, dir)),
+      s"""$T
+         |${TradeOps.scd2BuildSql}""".stripMargin),
+    Query("o8_kfold", (s, dir) => TradeOps.kfoldAssign(trades(s, dir)),
+      s"""$T
+         |${TradeOps.kfoldAssignSql()}""".stripMargin),
+    Query("f14_zscore", (s, dir) => TradeOps.zscoreScale(trades(s, dir)),
+      s"""$T
+         |${TradeOps.zscoreScaleSql}""".stripMargin),
+    Query("s14_schema_evolution", (s, dir) =>
+      TradeOps.schemaEvolutionRead(s, trades(s, dir)),
+      s"""$T
+         |${TradeOps.schemaEvolutionReadSql()}""".stripMargin),
+    Query("mv_retract", (s, dir) =>
+      Incremental.incrementalRetract(Tables.events(s, dir)),
+      Incremental.incrementalRetractSql),
+    Query("e_rfm", (s, dir) => Relational.rfmSegments(s, dir),
+      Relational.rfmSegmentsSql),
+    Query("a21_yoy_revenue", (s, dir) => Relational.yoyRevenue(s, dir),
+      Relational.yoyRevenueSql),
+    Query("k12_cdc_apply", (s, dir) => Incremental.cdcApply(trades(s, dir)),
+      s"$T,\n${Incremental.cdcApplySql}"),
+    Query("v_range_search", (s, dir) => Similarity.rangeSearch(s, dir),
+      Similarity.rangeSearchSql()),
+    Query("v_kcenter_seeds", (s, dir) => Similarity.kcenterSeeds(s, dir),
+      Similarity.kcenterSeedsSql()),
+    Query("d_containment", (s, dir) => Dedup.containment(Tables.load(s, dir, "documents")),
+      Dedup.containmentSql()),
+    Query("d_lsh_recall", (s, dir) => Dedup.lshRecall(Tables.load(s, dir, "documents")),
+      Dedup.lshRecallSql()),
+    Query("t_feature_hash", (s, dir) => TextOps.featureHash(Tables.load(s, dir, "documents")),
+      TextOps.featureHashSql()),
+    Query("g_degree_hist", (s, dir) => {
+      val docs = Tables.load(s, dir, "documents")
+      Graph.degreeHistogram(docs.select("doc_id"), Dedup.dupEdges(docs))
+    },
+      Dedup.similarityDegreeSql()),
+    Query("w16_pivot_points", (s, dir) => TradeOps.pivotPoints(trades(s, dir)),
+      s"$T\n${TradeOps.pivotPointsSql}"),
+    Query("w17_twap", (s, dir) => TradeOps.twap(trades(s, dir)),
+      s"$T,\n${TradeOps.twapSql.stripPrefix("WITH ")}"),
+    Query("o9_group_split", (s, dir) => TradeOps.groupSplit(trades(s, dir)),
+      s"$T\n${TradeOps.groupSplitSql()}"),
+    Query("a22_benford", (s, dir) => TradeOps.benfordProfile(trades(s, dir)),
+      s"$T,\n${TradeOps.benfordProfileSql.stripPrefix("WITH ")}"),
+    Query("m_modality_shard", (s, dir) =>
+      Multimodal.modalityShard(Tables.load(s, dir, "documents")),
+      Multimodal.modalityShardSql()),
+    Query("e_conversion_paths", (s, dir) =>
+      EventAnalytics.conversionPaths(Tables.events(s, dir)),
+      EventAnalytics.conversionPathsSql()),
+    Query("p3_props_shred", (s, dir) =>
+      EventAnalytics.propsShred(Tables.events(s, dir)),
+      EventAnalytics.propsShredSql),
+    Query("w18_run_length", (s, dir) => TradeOps.runLength(trades(s, dir)),
+      s"$T,\n${TradeOps.runLengthSql().stripPrefix("WITH ")}"),
+    Query("g_kcore", (s, dir) => {
+      val docs = Tables.load(s, dir, "documents")
+      // dupEdges guarantees a canonical (doc_a < doc_b, distinct,
+      // checkpointed) list — skip kCore's normalize+distinct shuffle
+      Graph.kCore(Dedup.dupEdges(docs), assumeCanonical = true)
+    },
+      Dedup.kCoreSql()),
+    Query("k13_dynamic_overwrite", (s, dir) =>
+      TradeOps.dynamicPartitionOverwrite(s, trades(s, dir)),
+      s"$T\n${TradeOps.dynamicPartitionOverwriteSql()}"),
+    Query("a23_autocorr", (s, dir) => TradeOps.autocorr(trades(s, dir)),
+      s"$T,\n${TradeOps.autocorrSql.stripPrefix("WITH ")}"),
+    Query("a24_ks_drift", (s, dir) => TradeOps.ksDrift(trades(s, dir)),
+      s"$T,\n${TradeOps.ksDriftSql().stripPrefix("WITH ")}"),
+    Query("e_stickiness", (s, dir) =>
+      EventAnalytics.stickiness(Tables.events(s, dir)),
+      EventAnalytics.stickinessSql),
+    Query("k14_wap", (s, dir) => graft.sinks.Wap.roundTrip(s, trades(s, dir)),
+      s"$T\n${graft.sinks.Wap.roundTripSql}"),
+    Query("p_filter_funnel", (s, dir) =>
+      Pipeline.filterFunnel(Tables.load(s, dir, "documents")),
+      Pipeline.filterFunnelSql),
+    Query("a25_concentration", (s, dir) => TradeOps.concentration(trades(s, dir)),
+      s"$T,\n${TradeOps.concentrationSql.stripPrefix("WITH ")}"),
+    Query("f16_target_encode", (s, dir) => TradeOps.targetEncode(trades(s, dir)),
+      s"$T,\n${TradeOps.targetEncodeSql.stripPrefix("WITH ")}"),
+    Query("f17_quantile_rank", (s, dir) => TradeOps.quantileRank(trades(s, dir)),
+      s"$T,\n${TradeOps.quantileRankSql.stripPrefix("WITH ")}"),
+    Query("a26_chisq", (s, dir) => TradeOps.chisqHourly(trades(s, dir)),
+      s"$T,\n${TradeOps.chisqHourlySql.stripPrefix("WITH ")}"),
+    Query("s16_table_fingerprint", (s, dir) =>
+      TradeOps.tableFingerprint(trades(s, dir)),
+      s"$T,\n${TradeOps.tableFingerprintSql.stripPrefix("WITH ")}"),
+    Query("v_mips_topk", (s, dir) => Similarity.mipsTopK(s, dir),
+      Similarity.mipsTopKSql()),
+    Query("d_cross_dedup", (s, dir) =>
+      Dedup.crossDedup(Tables.load(s, dir, "documents")),
+      Dedup.crossDedupSql()),
+    Query("v_hybrid_rrf", (s, dir) => Similarity.hybridRrf(s, dir),
+      Similarity.hybridRrfSql()),
+    Query("o10_purged_embargo", (s, dir) =>
+      TradeOps.purgedEmbargoSplits(trades(s, dir)),
+      s"$T\n${TradeOps.purgedEmbargoSplitsSql()}"),
+    Query("t_tv_drift", (s, dir) =>
+      TextOps.tvDrift(Tables.load(s, dir, "documents")),
+      TextOps.tvDriftSql),
+    Query("k15_merge_on_read", (s, dir) =>
+      TradeOps.mergeOnRead(s, trades(s, dir)),
+      s"$T\n${TradeOps.mergeOnReadSql()}"),
+    Query("s17_zonemap_prune", (s, dir) =>
+      TradeOps.zonemapPrune(s, trades(s, dir)),
+      s"$T\n${TradeOps.zonemapPruneSql()}"),
+    Query("s18_bloom_prune", (s, dir) =>
+      TradeOps.bloomPrune(s, trades(s, dir)),
+      s"$T\n${TradeOps.bloomPruneSql()}"),
+    Query("f18_robust_scale", (s, dir) => TradeOps.robustScale(trades(s, dir)),
+      s"$T,\n${TradeOps.robustScaleSql.stripPrefix("WITH ")}"),
+    Query("e_time_to_convert", (s, dir) =>
+      EventAnalytics.timeToConvert(Tables.events(s, dir)),
+      EventAnalytics.timeToConvertSql),
+    Query("e_ltv_curve", (s, dir) =>
+      EventAnalytics.ltvCurve(Tables.events(s, dir)),
+      EventAnalytics.ltvCurveSql),
+    Query("w19_realized_vol", (s, dir) => TradeOps.realizedVol(trades(s, dir)),
+      s"$T,\n${TradeOps.realizedVolSql.stripPrefix("WITH ")}"),
+    Query("q25_copurchase", (s, dir) => Relational.copurchase(s, dir),
+      Relational.copurchaseSql()),
+    Query("v_kmeans_purity", (s, dir) => Similarity.kmeansPurity(s, dir),
+      Similarity.kmeansPuritySql()),
+    Query("a_var_es", (s, dir) => TradeOps.varEs(trades(s, dir)),
+      s"$T\n${TradeOps.varEsSql()}"),
+    Query("a_moment_profile", (s, dir) =>
+      TradeOps.momentProfile(trades(s, dir)),
+      s"$T\n${TradeOps.momentProfileSql}"),
+    Query("w_mfi", (s, dir) => TradeOps.mfi(trades(s, dir)),
+      s"$T\n${TradeOps.mfiSql()}"),
+    Query("e_interarrival", (s, dir) =>
+      EventAnalytics.interarrival(Tables.events(s, dir)),
+      EventAnalytics.interarrivalSql),
+    Query("t_readability", (s, dir) =>
+      TextOps.readability(Tables.load(s, dir, "documents")),
+      TextOps.readabilitySql),
+    Query("v_mmr_select", (s, dir) => Similarity.mmrSelect(s, dir),
+      Similarity.mmrSelectSql()),
+    Query("e_markov_stationary", (s, dir) =>
+      EventAnalytics.markovStationary(Tables.events(s, dir)),
+      EventAnalytics.markovStationarySql()),
+    Query("e_simpson_diversity", (s, dir) =>
+      EventAnalytics.simpsonDiversity(Tables.events(s, dir)),
+      EventAnalytics.simpsonDiversitySql),
+    Query("s20_partition_diff", (s, dir) =>
+      TradeOps.partitionDiff(trades(s, dir)),
+      s"$T\n${TradeOps.partitionDiffSql()}"),
+    Query("v_prf_expand", (s, dir) => Similarity.prfExpand(s, dir),
+      Similarity.prfExpandSql()),
+    Query("w_vol_regime", (s, dir) => TradeOps.volRegime(trades(s, dir)),
+      s"$T\n${TradeOps.volRegimeSql()}"),
+    Query("w_vol_regime_banded", (s, dir) =>
+      TradeOps.volRegimeBanded(trades(s, dir)),
+      // banded two-pass rank is a physical rewrite: the exact-ntile SQL
+      // doubles as its equivalence proof
+      s"$T\n${TradeOps.volRegimeSql()}"),
+    Query("w_donchian", (s, dir) => TradeOps.donchian(trades(s, dir)),
+      s"$T\n${TradeOps.donchianSql()}"),
+    Query("t_heaps_law", (s, dir) =>
+      TextOps.heapsLaw(Tables.load(s, dir, "documents")),
+      TextOps.heapsLawSql()),
+    Query("e_rate_change", (s, dir) =>
+      EventAnalytics.rateChange(Tables.events(s, dir)),
+      EventAnalytics.rateChangeSql),
+    Query("d_len_dup_bias", (s, dir) =>
+      Dedup.lenDupBias(Tables.load(s, dir, "documents")),
+      Dedup.lenDupBiasSql),
+    Query("e_audience_overlap", (s, dir) =>
+      EventAnalytics.audienceOverlap(Tables.events(s, dir)),
+      EventAnalytics.audienceOverlapSql),
+    Query("a_subsample_stability", (s, dir) =>
+      TradeOps.subsampleStability(trades(s, dir)),
+      s"$T\n${TradeOps.subsampleStabilitySql()}"),
+    Query("q28_ship_latency", (s, dir) => Relational.shipLatency(s, dir),
+      Relational.shipLatencySql),
+    Query("q29_order_gap_hist", (s, dir) => Relational.orderGapHist(s, dir),
+      Relational.orderGapHistSql),
+    Query("v_pq_occupancy", (s, dir) => Similarity.pqOccupancy(s, dir),
+      Similarity.pqOccupancySql()),
+    Query("d_cluster_size_hist", (s, dir) =>
+      Dedup.clusterSizeHist(Tables.load(s, dir, "documents")),
+      Dedup.clusterSizeHistSql),
+    Query("k17_rollback", (s, dir) =>
+      TradeOps.rollbackRoundTrip(s, trades(s, dir)),
+      s"$T\n${TradeOps.rollbackRoundTripSql}"),
+    Query("v_ivf_occupancy", (s, dir) => Similarity.ivfOccupancy(s, dir),
+      Similarity.ivfOccupancySql()),
+    Query("w_vpin", (s, dir) => TradeOps.vpin(trades(s, dir)),
+      s"$T\n${TradeOps.vpinSql()}"),
+    Query("p_sqrt_temper", (s, dir) =>
+      Pipeline.sqrtTemper(Tables.load(s, dir, "documents")),
+      Pipeline.sqrtTemperSql),
+    Query("e_bot_score", (s, dir) =>
+      EventAnalytics.botScore(Tables.events(s, dir)),
+      EventAnalytics.botScoreSql()),
+    Query("v_centroid_auc", (s, dir) => Similarity.centroidAuc(s, dir),
+      Similarity.centroidAucSql()),
+    Query("w_amihud", (s, dir) => TradeOps.amihud(trades(s, dir)),
+      s"$T\n${TradeOps.amihudSql}"),
+    Query("w_roll_spread", (s, dir) => TradeOps.rollSpread(trades(s, dir)),
+      s"$T\n${TradeOps.rollSpreadSql}"),
+    Query("a_bootstrap_ci", (s, dir) => TradeOps.bootstrapCi(trades(s, dir)),
+      s"$T\n${TradeOps.bootstrapCiSql()}"),
+    Query("w_parkinson", (s, dir) => TradeOps.parkinsonRange(trades(s, dir)),
+      s"$T\n${TradeOps.parkinsonRangeSql}"),
+    Query("w_beta_rolling", (s, dir) => TradeOps.rollingBeta(trades(s, dir)),
       s"""$T, ${TradeOps.dbarsCte}
-         |${TradeOps.marketBetaSql}""".stripMargin,
-    "w14_macd" ->
-      s"""$T
-         |${TradeOps.macdSql()}""".stripMargin,
-    "a18_mode" ->
-      s"""$T
-         |${TradeOps.modalPriceSql}""".stripMargin,
-    "t_code_detect" -> TextOps.codeDetectSql,
-    "w15_interval_merge" ->
-      s"""$T
-         |${TradeOps.mergeIntervalsSql()}""".stripMargin,
-    "a20_equidepth" ->
-      s"""$T
-         |${TradeOps.equiDepthHistogramSql()}""".stripMargin,
-    "o7_walk_forward" ->
-      s"""$T
-         |${TradeOps.walkForwardSplitsSql()}""".stripMargin,
-    "f13_delta_encode" ->
-      s"""$T
-         |${TradeOps.deltaEncodeSql}""".stripMargin,
-    "e_attribution" -> EventAnalytics.lastTouchAttributionSql(),
-    "b_bloom_join" -> Relational.bloomSemiJoinRevenueSql,
-    "k11_scd2" ->
-      s"""$T
-         |${TradeOps.scd2BuildSql}""".stripMargin,
-    "o8_kfold" ->
-      s"""$T
-         |${TradeOps.kfoldAssignSql()}""".stripMargin,
-    "f14_zscore" ->
-      s"""$T
-         |${TradeOps.zscoreScaleSql}""".stripMargin,
-    "s14_schema_evolution" ->
-      s"""$T
-         |${TradeOps.schemaEvolutionReadSql()}""".stripMargin,
-    "mv_retract" -> Incremental.incrementalRetractSql,
-    "e_rfm" -> Relational.rfmSegmentsSql,
-    "a21_yoy_revenue" -> Relational.yoyRevenueSql,
-    "k12_cdc_apply" -> s"$T,\n${Incremental.cdcApplySql}",
-    "v_range_search" -> Similarity.rangeSearchSql(),
-    "v_kcenter_seeds" -> Similarity.kcenterSeedsSql(),
-    "d_containment" -> Dedup.containmentSql(),
-    "d_lsh_recall" -> Dedup.lshRecallSql(),
-    "t_feature_hash" -> TextOps.featureHashSql(),
-    "g_degree_hist" -> Dedup.similarityDegreeSql(),
-    "w16_pivot_points" -> s"$T\n${TradeOps.pivotPointsSql}",
-    "w17_twap" -> s"$T,\n${TradeOps.twapSql.stripPrefix("WITH ")}",
-    "o9_group_split" -> s"$T\n${TradeOps.groupSplitSql()}",
-    "a22_benford" -> s"$T,\n${TradeOps.benfordProfileSql.stripPrefix("WITH ")}",
-    "m_modality_shard" -> Multimodal.modalityShardSql(),
-    "e_conversion_paths" -> EventAnalytics.conversionPathsSql(),
-    "p3_props_shred" -> EventAnalytics.propsShredSql,
-    "w18_run_length" -> s"$T,\n${TradeOps.runLengthSql().stripPrefix("WITH ")}",
-    "g_kcore" -> Dedup.kCoreSql(),
-    "k13_dynamic_overwrite" -> s"$T\n${TradeOps.dynamicPartitionOverwriteSql()}",
-    "a23_autocorr" -> s"$T,\n${TradeOps.autocorrSql.stripPrefix("WITH ")}",
-    "a24_ks_drift" -> s"$T,\n${TradeOps.ksDriftSql().stripPrefix("WITH ")}",
-    "e_stickiness" -> EventAnalytics.stickinessSql,
-    "k14_wap" -> s"$T\n${graft.sinks.Wap.roundTripSql}",
-    "p_filter_funnel" -> Pipeline.filterFunnelSql,
-    "a25_concentration" -> s"$T,\n${TradeOps.concentrationSql.stripPrefix("WITH ")}",
-    "f16_target_encode" -> s"$T,\n${TradeOps.targetEncodeSql.stripPrefix("WITH ")}",
-    "f17_quantile_rank" -> s"$T,\n${TradeOps.quantileRankSql.stripPrefix("WITH ")}",
-    "a26_chisq" -> s"$T,\n${TradeOps.chisqHourlySql.stripPrefix("WITH ")}",
-    "s16_table_fingerprint" -> s"$T,\n${TradeOps.tableFingerprintSql.stripPrefix("WITH ")}",
-    "v_mips_topk" -> Similarity.mipsTopKSql(),
-    "d_cross_dedup" -> Dedup.crossDedupSql(),
-    "v_hybrid_rrf" -> Similarity.hybridRrfSql(),
-    "o10_purged_embargo" -> s"$T\n${TradeOps.purgedEmbargoSplitsSql()}",
-    "t_tv_drift" -> TextOps.tvDriftSql,
-    "k15_merge_on_read" -> s"$T\n${TradeOps.mergeOnReadSql()}",
-    "s17_zonemap_prune" -> s"$T\n${TradeOps.zonemapPruneSql()}",
-    "s18_bloom_prune" -> s"$T\n${TradeOps.bloomPruneSql()}",
-    "f18_robust_scale" -> s"$T,\n${TradeOps.robustScaleSql.stripPrefix("WITH ")}",
-    "e_time_to_convert" -> EventAnalytics.timeToConvertSql,
-    "e_ltv_curve" -> EventAnalytics.ltvCurveSql,
-    "w19_realized_vol" -> s"$T,\n${TradeOps.realizedVolSql.stripPrefix("WITH ")}",
-    "q25_copurchase" -> Relational.copurchaseSql(),
-    "v_kmeans_purity" -> Similarity.kmeansPuritySql(),
-    "a_var_es" -> s"$T\n${TradeOps.varEsSql()}",
-    "a_moment_profile" -> s"$T\n${TradeOps.momentProfileSql}",
-    "w_mfi" -> s"$T\n${TradeOps.mfiSql()}",
-    "e_interarrival" -> EventAnalytics.interarrivalSql,
-    "t_readability" -> TextOps.readabilitySql,
-    "v_mmr_select" -> Similarity.mmrSelectSql(),
-    "e_markov_stationary" -> EventAnalytics.markovStationarySql(),
-    "e_simpson_diversity" -> EventAnalytics.simpsonDiversitySql,
-    "s20_partition_diff" -> s"$T\n${TradeOps.partitionDiffSql()}",
-    "v_prf_expand" -> Similarity.prfExpandSql(),
-    "w_vol_regime" -> s"$T\n${TradeOps.volRegimeSql()}",
-    // banded two-pass rank is a physical rewrite: the exact-ntile SQL
-    // doubles as its equivalence proof
-    "w_vol_regime_banded" -> s"$T\n${TradeOps.volRegimeSql()}",
-    "w_donchian" -> s"$T\n${TradeOps.donchianSql()}",
-    "t_heaps_law" -> TextOps.heapsLawSql(),
-    "e_rate_change" -> EventAnalytics.rateChangeSql,
-    "d_len_dup_bias" -> Dedup.lenDupBiasSql,
-    "e_audience_overlap" -> EventAnalytics.audienceOverlapSql,
-    "a_subsample_stability" -> s"$T\n${TradeOps.subsampleStabilitySql()}",
-    "q28_ship_latency" -> Relational.shipLatencySql,
-    "q29_order_gap_hist" -> Relational.orderGapHistSql,
-    "v_pq_occupancy" -> Similarity.pqOccupancySql(),
-    "d_cluster_size_hist" -> Dedup.clusterSizeHistSql,
-    "k17_rollback" -> s"$T\n${TradeOps.rollbackRoundTripSql}",
-    "v_ivf_occupancy" -> Similarity.ivfOccupancySql(),
-    "w_vpin" -> s"$T\n${TradeOps.vpinSql()}",
-    "p_sqrt_temper" -> Pipeline.sqrtTemperSql,
-    "e_bot_score" -> EventAnalytics.botScoreSql(),
-    "v_centroid_auc" -> Similarity.centroidAucSql(),
-    "w_amihud" -> s"$T\n${TradeOps.amihudSql}",
-    "w_roll_spread" -> s"$T\n${TradeOps.rollSpreadSql}",
-    "a_bootstrap_ci" -> s"$T\n${TradeOps.bootstrapCiSql()}",
-    "w_parkinson" -> s"$T\n${TradeOps.parkinsonRangeSql}",
-    "w_beta_rolling" ->
-      s"""$T, ${TradeOps.dbarsCte}
-         |${TradeOps.rollingBetaSql()}""".stripMargin,
-    "w_variance_ratio" -> s"$T,\n${TradeOps.varianceRatioSql()}",
-    "w_kyle_lambda" -> s"$T,\n${TradeOps.kyleLambdaSql}",
-    "w_keltner" -> s"$T\n${TradeOps.keltnerSql()}",
-    "a_rank_drift" -> s"$T\n${TradeOps.rankDriftSql}",
-    "w_adx" -> s"$T\n${TradeOps.adxSql()}",
-    "a_acf_profile" -> s"$T,\n${TradeOps.acfProfileSql()}",
-    "w_sharpe" -> s"$T\n${TradeOps.sharpeSql}",
-    "t_vocab_overlap" -> TextOps.vocabOverlapSql,
-    "a_adf_stat" -> s"$T,\n${TradeOps.adfStatSql}",
-    "w_cci" -> s"$T\n${TradeOps.cciSql()}",
-    "w_hurst_rs" -> s"$T\n${TradeOps.hurstRsSql()}",
-    "w_max_drawdown" -> s"$T\n${TradeOps.maxDrawdownSql}",
-    "v_hubness" -> Similarity.hubnessSql(),
-    "v_nn_margin" -> Similarity.nnMarginSql(),
-    "e_pareto_share" -> EventAnalytics.paretoShareSql,
-    "t_hapax_profile" -> TextOps.hapaxProfileSql,
-    "e_new_returning" -> EventAnalytics.newReturningSql,
-    "v_silhouette" -> Similarity.silhouetteSql(),
-    "v_davies_bouldin" -> Similarity.daviesBouldinSql(),
-    "v_pq_distortion" -> Similarity.pqDistortionSql(),
-    "e_lifespan_hist" -> EventAnalytics.lifespanHistSql,
-    "q30_supplier_hhi" -> Relational.supplierHhiSql,
-    "q31_decile_migration" -> Relational.decileMigrationSql,
-    "e_rate_anomaly" -> EventAnalytics.rateAnomalySql,
-    "e_rolling_wau" -> EventAnalytics.rollingWauSql,
-    "w_volume_profile" -> s"$T\n${TradeOps.volumeProfileSql}",
-    "v_pca_deflate" -> Similarity.pcaDeflateSql(),
-    "g_rich_club" -> Dedup.similarityRichClubSql(),
-    "d_bucket_skew" -> Dedup.bucketSkewSql,
-    "q26_revenue_deciles" -> Relational.revenueDecilesSql,
-    "e_seasonal_profile" -> EventAnalytics.seasonalProfileSql,
-    "w_sortino" -> s"$T\n${TradeOps.sortinoSql}",
-    "w_calmar" -> s"$T\n${TradeOps.calmarSql}",
-    "w_ulcer" -> s"$T\n${TradeOps.ulcerIndexSql}",
-    "w_williams_r" -> s"$T\n${TradeOps.williamsRSql}",
-    "w_obv_divergence" -> s"$T\n${TradeOps.obvDivergenceSql}",
-    "e_active_streaks" -> EventAnalytics.activeStreaksSql,
-    "g_two_hop_reach" -> Dedup.similarityTwoHopSql(),
-    "v_int8_order_flips" -> Similarity.int8OrderFlipsSql(),
-    "k18_snapshot_expire" -> s"$T\n${TradeOps.snapshotExpireSql}",
-    "e_churn_rate" -> EventAnalytics.churnRateSql,
-    "w_squeeze" -> s"$T\n${TradeOps.squeezeSql()}",
-    "w_rvi" -> s"$T\n${TradeOps.rviSql}",
-    "a_round_price_bias" -> s"$T\n${TradeOps.roundPriceBiasSql}",
-    "w_gap_fill" -> s"$T\n${TradeOps.gapFillSql}",
-    "w_narrow_range" -> s"$T\n${TradeOps.narrowRangeSql}",
-    "k19_compact_generations" -> s"$T\n${TradeOps.compactGenerationsSql}",
-    "a_depth_ladder" -> s"$T\n${TradeOps.depthLadderSql()}",
-    "p_balanced_sample" -> Pipeline.balancedSampleSql,
-    "d_source_similarity" -> Dedup.sourceSimilaritySql,
-    "k20_prediction_accuracy" -> Predict.predictionAccuracySql(),
-    "k21_audited_lifecycle" -> s"$T\n${graft.sinks.Wap.auditedLifecycleSql}",
-    "k22_schema_evolution" -> s"$T\n${TradeOps.schemaEvolutionSql}",
-    "k23_gdpr_purge" -> s"$T\n${TradeOps.gdprPurgeSql}",
-    "q_constraint_suite" -> Relational.constraintSuiteSql,
-    "e_survival_curve" -> EventAnalytics.survivalCurveSql,
-    "j_fanout_profile" -> Relational.fanoutProfileSql,
-    "e_cuped_ab" -> EventAnalytics.cupedAbSql,
-    "p_k_anonymize" -> Pipeline.kAnonymizeSql,
+         |${TradeOps.rollingBetaSql()}""".stripMargin),
+    Query("w_variance_ratio", (s, dir) => TradeOps.varianceRatio(trades(s, dir)),
+      s"$T,\n${TradeOps.varianceRatioSql()}"),
+    Query("w_kyle_lambda", (s, dir) => TradeOps.kyleLambda(trades(s, dir)),
+      s"$T,\n${TradeOps.kyleLambdaSql}"),
+    Query("w_keltner", (s, dir) => TradeOps.keltner(trades(s, dir)),
+      s"$T\n${TradeOps.keltnerSql()}"),
+    Query("a_rank_drift", (s, dir) => TradeOps.rankDrift(trades(s, dir)),
+      s"$T\n${TradeOps.rankDriftSql}"),
+    Query("w_adx", (s, dir) => TradeOps.adx(trades(s, dir)),
+      s"$T\n${TradeOps.adxSql()}"),
+    Query("a_acf_profile", (s, dir) => TradeOps.acfProfile(trades(s, dir)),
+      s"$T,\n${TradeOps.acfProfileSql()}"),
+    Query("w_sharpe", (s, dir) => TradeOps.sharpe(trades(s, dir)),
+      s"$T\n${TradeOps.sharpeSql}"),
+    Query("t_vocab_overlap", (s, dir) =>
+      TextOps.vocabOverlap(Tables.load(s, dir, "documents")),
+      TextOps.vocabOverlapSql),
+    Query("a_adf_stat", (s, dir) => TradeOps.adfStat(trades(s, dir)),
+      s"$T,\n${TradeOps.adfStatSql}"),
+    Query("w_cci", (s, dir) => TradeOps.cci(trades(s, dir)),
+      s"$T\n${TradeOps.cciSql()}"),
+    Query("w_hurst_rs", (s, dir) => TradeOps.hurstRs(trades(s, dir)),
+      s"$T\n${TradeOps.hurstRsSql()}"),
+    Query("w_max_drawdown", (s, dir) => TradeOps.maxDrawdown(trades(s, dir)),
+      s"$T\n${TradeOps.maxDrawdownSql}"),
+    Query("v_hubness", (s, dir) => Similarity.hubness(s, dir),
+      Similarity.hubnessSql()),
+    Query("v_nn_margin", (s, dir) => Similarity.nnMargin(s, dir),
+      Similarity.nnMarginSql()),
+    Query("e_pareto_share", (s, dir) =>
+      EventAnalytics.paretoShare(Tables.events(s, dir)),
+      EventAnalytics.paretoShareSql),
+    Query("t_hapax_profile", (s, dir) =>
+      TextOps.hapaxProfile(Tables.load(s, dir, "documents")),
+      TextOps.hapaxProfileSql),
+    Query("e_new_returning", (s, dir) =>
+      EventAnalytics.newReturning(Tables.events(s, dir)),
+      EventAnalytics.newReturningSql),
+    Query("v_silhouette", (s, dir) => Similarity.silhouette(s, dir),
+      Similarity.silhouetteSql()),
+    Query("v_davies_bouldin", (s, dir) => Similarity.daviesBouldin(s, dir),
+      Similarity.daviesBouldinSql()),
+    Query("v_pq_distortion", (s, dir) => Similarity.pqDistortion(s, dir),
+      Similarity.pqDistortionSql()),
+    Query("e_lifespan_hist", (s, dir) =>
+      EventAnalytics.lifespanHist(Tables.events(s, dir)),
+      EventAnalytics.lifespanHistSql),
+    Query("q30_supplier_hhi", (s, dir) => Relational.supplierHhi(s, dir),
+      Relational.supplierHhiSql),
+    Query("q31_decile_migration", (s, dir) => Relational.decileMigration(s, dir),
+      Relational.decileMigrationSql),
+    Query("e_rate_anomaly", (s, dir) =>
+      EventAnalytics.rateAnomaly(Tables.events(s, dir)),
+      EventAnalytics.rateAnomalySql),
+    Query("e_rolling_wau", (s, dir) =>
+      EventAnalytics.rollingWau(Tables.events(s, dir)),
+      EventAnalytics.rollingWauSql),
+    Query("w_volume_profile", (s, dir) =>
+      TradeOps.volumeProfile(trades(s, dir)),
+      s"$T\n${TradeOps.volumeProfileSql}"),
+    Query("v_pca_deflate", (s, dir) => Similarity.pcaDeflate(s, dir),
+      Similarity.pcaDeflateSql()),
+    Query("g_rich_club", (s, dir) => {
+      val docs = Tables.load(s, dir, "documents")
+      // fifth consumer of the cached mutual-kNN similarity graph
+      Graph.richClub(Dedup.mutualKnn(
+        Dedup.weightedDupEdges(docs, Dedup.triangleThreshold)))
+    },
+      Dedup.similarityRichClubSql()),
+    Query("d_bucket_skew", (s, dir) =>
+      Dedup.bucketSkew(Tables.load(s, dir, "documents")),
+      Dedup.bucketSkewSql),
+    Query("q26_revenue_deciles", (s, dir) => Relational.revenueDeciles(s, dir),
+      Relational.revenueDecilesSql),
+    Query("e_seasonal_profile", (s, dir) =>
+      EventAnalytics.seasonalProfile(Tables.events(s, dir)),
+      EventAnalytics.seasonalProfileSql),
+    Query("w_sortino", (s, dir) => TradeOps.sortino(trades(s, dir)),
+      s"$T\n${TradeOps.sortinoSql}"),
+    Query("w_calmar", (s, dir) => TradeOps.calmar(trades(s, dir)),
+      s"$T\n${TradeOps.calmarSql}"),
+    Query("w_ulcer", (s, dir) => TradeOps.ulcerIndex(trades(s, dir)),
+      s"$T\n${TradeOps.ulcerIndexSql}"),
+    Query("w_williams_r", (s, dir) => TradeOps.williamsR(trades(s, dir)),
+      s"$T\n${TradeOps.williamsRSql}"),
+    Query("w_obv_divergence", (s, dir) => TradeOps.obvDivergence(trades(s, dir)),
+      s"$T\n${TradeOps.obvDivergenceSql}"),
+    Query("e_active_streaks", (s, dir) =>
+      EventAnalytics.activeStreaks(Tables.events(s, dir)),
+      EventAnalytics.activeStreaksSql),
+    Query("g_two_hop_reach", (s, dir) => {
+      val docs = Tables.load(s, dir, "documents")
+      // rides the cached mutual-kNN graph (deg <= k): the raw dup
+      // graph's boilerplate near-cliques make the mid-vertex join
+      // cubic — measured live at sf0.1 (disk-filling shuffle spill)
+      Graph.twoHopReach(docs.select("doc_id"), Dedup.mutualKnn(
+        Dedup.weightedDupEdges(docs, Dedup.triangleThreshold)))
+    },
+      Dedup.similarityTwoHopSql()),
+    Query("v_int8_order_flips", (s, dir) => Similarity.int8OrderFlips(s, dir),
+      Similarity.int8OrderFlipsSql()),
+    Query("k18_snapshot_expire", (s, dir) =>
+      TradeOps.snapshotExpire(s, trades(s, dir)),
+      s"$T\n${TradeOps.snapshotExpireSql}"),
+    Query("e_churn_rate", (s, dir) =>
+      EventAnalytics.churnRate(Tables.events(s, dir)),
+      EventAnalytics.churnRateSql),
+    Query("w_squeeze", (s, dir) => TradeOps.squeeze(trades(s, dir)),
+      s"$T\n${TradeOps.squeezeSql()}"),
+    Query("w_rvi", (s, dir) => TradeOps.rvi(trades(s, dir)),
+      s"$T\n${TradeOps.rviSql}"),
+    Query("a_round_price_bias", (s, dir) =>
+      TradeOps.roundPriceBias(trades(s, dir)),
+      s"$T\n${TradeOps.roundPriceBiasSql}"),
+    Query("w_gap_fill", (s, dir) => TradeOps.gapFill(trades(s, dir)),
+      s"$T\n${TradeOps.gapFillSql}"),
+    Query("w_narrow_range", (s, dir) => TradeOps.narrowRange(trades(s, dir)),
+      s"$T\n${TradeOps.narrowRangeSql}"),
+    Query("k19_compact_generations", (s, dir) =>
+      TradeOps.compactGenerations(s, trades(s, dir)),
+      s"$T\n${TradeOps.compactGenerationsSql}"),
+    Query("a_depth_ladder", (s, dir) => TradeOps.depthLadder(trades(s, dir)),
+      s"$T\n${TradeOps.depthLadderSql()}"),
+    Query("p_balanced_sample", (s, dir) =>
+      Pipeline.balancedSample(Tables.load(s, dir, "documents")),
+      Pipeline.balancedSampleSql),
+    Query("d_source_similarity", (s, dir) =>
+      Dedup.sourceSimilarity(Tables.load(s, dir, "documents")),
+      Dedup.sourceSimilaritySql),
+    Query("k20_prediction_accuracy", (s, dir) =>
+      Predict.predictionAccuracy(trades(s, dir)),
+      Predict.predictionAccuracySql()),
+    Query("k21_audited_lifecycle", (s, dir) =>
+      graft.sinks.Wap.auditedLifecycle(s, trades(s, dir)),
+      s"$T\n${graft.sinks.Wap.auditedLifecycleSql}"),
+    Query("k22_schema_evolution", (s, dir) =>
+      TradeOps.schemaEvolution(s, trades(s, dir)),
+      s"$T\n${TradeOps.schemaEvolutionSql}"),
+    Query("k23_gdpr_purge", (s, dir) =>
+      TradeOps.gdprPurge(s, trades(s, dir)),
+      s"$T\n${TradeOps.gdprPurgeSql}"),
+    Query("q_constraint_suite", (s, dir) =>
+      Relational.constraintSuite(s, dir),
+      Relational.constraintSuiteSql),
+    Query("e_survival_curve", (s, dir) =>
+      EventAnalytics.survivalCurve(Tables.events(s, dir)),
+      EventAnalytics.survivalCurveSql),
+    Query("j_fanout_profile", (s, dir) =>
+      Relational.fanoutProfile(s, dir),
+      Relational.fanoutProfileSql),
+    Query("e_cuped_ab", (s, dir) =>
+      EventAnalytics.cupedAb(Tables.events(s, dir)),
+      EventAnalytics.cupedAbSql),
+    Query("p_k_anonymize", (s, dir) =>
+      Pipeline.kAnonymize(Tables.events(s, dir)),
+      Pipeline.kAnonymizeSql)
   )
+  require(registry.map(_.name).distinct.size == registry.size,
+    "registry names must be unique")
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(q => q.name -> q.build).toMap
+
+  val oracleSql: Map[String, String] =
+    registry.map(q => q.name -> q.oracleSql).toMap
+
+  /** Worker threads of a driver session: `SPARK_GRAFT_CPUS`, default the
+    * host's processors capped at 32. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors().min(32))
+
+  /** Shuffle partitions track the DATA, not the host width: ~16 MiB of
+    * compressed input parquet under `dataDir` per partition, floor `cpus`,
+    * cap 2048 (sf0.1 and below resolve to `cpus`, sf10 to ~96). At fixed
+    * partitioning per-partition working sets grow with the data: cores-many
+    * partitions made multi-GiB cached blocks at the 100x rehearsal (a
+    * spill-serialize cascade) and exhausted execution memory in the
+    * PageRank contribution aggregate. `SPARK_GRAFT_SHUFFLE_PARTITIONS`
+    * overrides. */
+  def shufflePartitions(dataDir: String, cpus: Int): Int =
+    sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS").map(_.toInt).getOrElse {
+      def walk(f: java.io.File): Long =
+        if (f.isDirectory) Option(f.listFiles).map(_.map(walk).sum)
+          .getOrElse(0L)
+        else f.length
+      (walk(new java.io.File(dataDir)) / (16L << 20))
+        .max(cpus.toLong).min(2048L).toInt
+    }
+
+  /** The one session every graft main and test suite runs in. It installs
+    * [[GraftExtensions]], so the graft SQL functions (`dot_product`,
+    * `lsh_bits`, `avro_*_envelope`) resolve in every query whatever ran
+    * before it; any other session that runs graft queries needs
+    * `spark.sql.extensions=graft.GraftExtensions` too. AQE is on except
+    * where a caller needs the static plan ([[PlanAudit]]). */
+  def session(cpus: Int, shufflePartitions: Int,
+      adaptive: Boolean = true): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.adaptive.enabled", adaptive.toString)
+      .config("spark.sql.extensions", classOf[GraftExtensions].getName)
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** Registry names to run, sorted: all of them, or those in the
+    * comma-separated `only` list (`SPARK_GRAFT_ONLY`). A name the registry
+    * lacks is an error — a typo must not select nothing and pass. */
+  def selected(only: Option[String] = sys.env.get("SPARK_GRAFT_ONLY")): Seq[String] =
+    only.fold(queries.keys.toSeq) { s =>
+      val names = s.split(",").map(_.trim).filter(_.nonEmpty).toSeq.distinct
+      val unknown = names.filterNot(queries.contains)
+      require(names.nonEmpty, "SPARK_GRAFT_ONLY is set but names no query")
+      require(unknown.isEmpty,
+        s"SPARK_GRAFT_ONLY names no registered query: ${unknown.mkString(", ")}")
+      names
+    }.sorted
+
+  /** Runs each query once at the smallest sf so a timed pass measures the
+    * steady-state plan, not first-run JIT/codegen; failures are left to the
+    * timed pass. Then quiesces: the warm-up leaves thousands of dead
+    * shuffle/broadcast/localCheckpoint references that the ContextCleaner
+    * only finds at the FIRST major GC, which un-forced lands minutes into
+    * the timed pass and inflates whichever queries it hits by 5-30 s. */
+  def warmUp(spark: SparkSession, names: Seq[String]): Unit = {
+    names.foreach { n =>
+      try queries(n)(spark, "/root/testdata/sf0.001")
+        .write.format("noop").mode("overwrite").save()
+      catch { case _: Throwable => () }
+    }
+    (1 to 3).foreach { _ => System.gc(); Thread.sleep(1500) }
+  }
 }

@@ -8,7 +8,6 @@ import org.apache.avro.Schema
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
 import org.apache.avro.io.{DecoderFactory, EncoderFactory}
 import org.apache.avro.util.Utf8
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
@@ -145,15 +144,5 @@ object AvroCodec {
 
     override protected def withNewChildInternal(c: Expression): Expression =
       copy(child = c)
-  }
-
-  /** Register `avro_encode_envelope` / `avro_decode_envelope` in the
-    * session function registry (the public seam for building Columns over
-    * custom expressions). Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "avro_encode_envelope", exprs => EncodeEnvelope(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "avro_decode_envelope", exprs => DecodeEnvelope(exprs.head), "built-in")
   }
 }

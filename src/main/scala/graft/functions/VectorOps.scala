@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
@@ -189,15 +188,5 @@ object VectorOps {
     val u1 = s"((xor($u0, $u0 >> 15) % 1048576) * 2654435761)"
     val u2 = s"((xor($u1, $u1 >> 20) % 1048576) * 1315423911)"
     s"(CASE WHEN (($u2 >> 39) & 1) = 0 THEN 1.0::DOUBLE ELSE -1.0::DOUBLE END)"
-  }
-
-  /** Register `dot_product` / `lsh_bits` in the session's function
-    * registry so plans can call them via `expr(...)`. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "lsh_bits", exprs => HyperplaneLshBits(exprs(0),
-        exprs(1).eval(null).asInstanceOf[Int]), "built-in")
   }
 }

@@ -109,11 +109,10 @@ object Decode {
     * `ProcessStockStream.py:100-102`): envelopes serialized to Avro
     * binary with [[graft.functions.AvroCodec.EncodeEnvelope]], decoded
     * back with the paired Catalyst expression, then the identical
-    * flatten/rename/derive plan. Requires
-    * [[graft.functions.AvroCodec.register]] on the session. */
+    * flatten/rename/derive plan. Requires a session with
+    * [[graft.GraftExtensions]] installed. */
   def avroRoundTrip(spark: org.apache.spark.sql.SparkSession,
       trades: DataFrame): DataFrame = {
-    graft.functions.AvroCodec.register(spark)
     val cumW = Window.partitionBy("symbol")
       .orderBy(col("timestamp"), col("event_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)

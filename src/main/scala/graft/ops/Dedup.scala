@@ -651,7 +651,6 @@ object Dedup {
     * surviving projection is three values per pair. */
   private def embeddingPairs(spark: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = {
-    graft.functions.VectorOps.register(spark)
     val totalBits = embDupBands * embDupBandBits
     val mask = (1 << embDupBandBits) - 1
     val embIn = graft.Tables.load(spark, dir, "embeddings")

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.VectorOps
 
 /** Approximate-nearest-neighbor search over the embeddings table
   * (SURVEY.md §7.5): brute-force cosine top-k as the exact baseline, and
@@ -25,7 +24,6 @@ object Similarity {
     * candidate set. Exact; the oracle baseline for the LSH variant. */
   def cosineTopK(spark: SparkSession, dir: String, nQueries: Int = 10,
       k: Int = 5): DataFrame = {
-    VectorOps.register(spark)
     val emb = withVec(graft.Tables.load(spark, dir, "embeddings"))
     val q = emb.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("norm").as("qn"))
@@ -54,7 +52,6 @@ object Similarity {
     * baseline, the [[cosineTopK]] discipline. */
   def hardNegatives(spark: SparkSession, dir: String, nQueries: Int = 10,
       k: Int = 3): DataFrame = {
-    VectorOps.register(spark)
     val emb = withVec(graft.Tables.load(spark, dir, "embeddings"))
     val q = emb.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("label").as("q_label"),
@@ -107,7 +104,6 @@ object Similarity {
     * exact form here stays the oracle baseline. */
   def mipsTopK(spark: SparkSession, dir: String, nQueries: Int = 10,
       k: Int = 5): DataFrame = {
-    VectorOps.register(spark)
     val emb = withVec(graft.Tables.load(spark, dir, "embeddings"))
     val q = emb.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
@@ -137,7 +133,6 @@ object Similarity {
     * per-query state stays O(kList) at any corpus size). */
   def hybridRrf(spark: SparkSession, dir: String, nQueries: Int = 5,
       kList: Int = 20, k: Int = 10, rrfK: Int = 60): DataFrame = {
-    VectorOps.register(spark)
     val docs = graft.Tables.load(spark, dir, "documents")
     val words = docs.select(col("doc_id"),
       explode(array_distinct(split(col("text"), " "))).as("word"))
@@ -261,7 +256,6 @@ object Similarity {
   def annIvf(spark: SparkSession, dir: String, nQueries: Int = 10,
       k: Int = 5, nCells: Int = 16, nProbe: Int = 4,
       trainIters: Int = 2): DataFrame = {
-    VectorOps.register(spark)
     val emb = withVec(graft.Tables.load(spark, dir, "embeddings"))
       .select(col("vec_id"), col("v"), col("norm"))
     val dim = embDim(spark, dir, emb)
@@ -484,7 +478,6 @@ object Similarity {
     * sample, exactly this plan. */
   def mrlRecall(spark: SparkSession, dir: String, nQueries: Int = 10,
       k: Int = 5, subDim: Int = 16): DataFrame = {
-    VectorOps.register(spark)
     val emb = withVec(graft.Tables.load(spark, dir, "embeddings"))
     val sub = emb.select(col("vec_id"), expr(s"slice(v, 1, $subDim)").as("sv"))
       .withColumn("snorm", sqrt(expr("dot_product(sv, sv)")))
@@ -589,7 +582,6 @@ object Similarity {
     * shuffle-free, the top-k is per-partition heaps. */
   def int8Recall(spark: SparkSession, dir: String, nQueries: Int = 10,
       k: Int = 5): DataFrame = {
-    VectorOps.register(spark)
     val emb = withVec(graft.Tables.load(spark, dir, "embeddings"))
     val rec = emb
       .withColumn("vh", expr(
@@ -808,7 +800,6 @@ object Similarity {
     * 8-term sum stays that way. */
   def pqCodes(spark: SparkSession, dir: String, m: Int = 8,
       k: Int = 16, trainIters: Int = 2): DataFrame = {
-    VectorOps.register(spark)
     val emb = graft.Tables.load(spark, dir, "embeddings")
       .withColumn("v", col("embedding").cast("array<double>"))
     val dim = embDim(spark, dir, emb)
@@ -939,7 +930,6 @@ object Similarity {
     * are bit-identical. */
   def kmeansCentroids(spark: SparkSession, dir: String, k: Int = 8,
       iters: Int = 2): DataFrame = {
-    VectorOps.register(spark)
     val emb = graft.Tables.load(spark, dir, "embeddings")
       .withColumn("v", col("embedding").cast("array<double>"))
     val dim = embDim(spark, dir, emb)
@@ -1174,7 +1164,6 @@ object Similarity {
     * training, no shuffle beyond two aggregate-sized groupBys. */
   def kmeansPurity(spark: SparkSession, dir: String, k: Int = 8,
       iters: Int = 2): DataFrame = {
-    VectorOps.register(spark)
     val emb = graft.Tables.load(spark, dir, "embeddings")
       .withColumn("v", col("embedding").cast("array<double>"))
     val dim = embDim(spark, dir, emb)
@@ -1229,7 +1218,6 @@ object Similarity {
     * ≤ ~10-row re-aggregation, integer decades. */
   def ivfOccupancy(spark: SparkSession, dir: String, nCells: Int = 16,
       trainIters: Int = 2): DataFrame = {
-    VectorOps.register(spark)
     val emb = graft.Tables.load(spark, dir, "embeddings")
       .withColumn("v", col("embedding").cast("array<double>"))
     val dim = embDim(spark, dir, emb)
@@ -1274,7 +1262,6 @@ object Similarity {
   def pqAdc(spark: SparkSession, dir: String, nQueries: Int = 10,
       kNn: Int = 5, m: Int = 8, k: Int = 16,
       trainIters: Int = 2): DataFrame = {
-    VectorOps.register(spark)
     val emb = graft.Tables.load(spark, dir, "embeddings")
       .withColumn("v", col("embedding").cast("array<double>"))
     val dim = embDim(spark, dir, emb)
@@ -1384,7 +1371,6 @@ object Similarity {
   def ivfPqAdc(spark: SparkSession, dir: String, nQueries: Int = 10,
       kNn: Int = 5, nCells: Int = 16, nProbe: Int = 4, m: Int = 8,
       trainIters: Int = 2): DataFrame = {
-    VectorOps.register(spark)
     val emb = withVec(graft.Tables.load(spark, dir, "embeddings"))
       .select(col("vec_id"), col("v"), col("norm"))
     val dim = embDim(spark, dir, emb)
@@ -1519,7 +1505,6 @@ object Similarity {
     * is shipped). Bucket join → exact cosine re-rank inside buckets. */
   def annLsh(spark: SparkSession, dir: String, nQueries: Int = 10,
       k: Int = 3, nBits: Int = 8): DataFrame = {
-    VectorOps.register(spark)
     val emb = withVec(graft.Tables.load(spark, dir, "embeddings"))
     // bit_j = sign(sum_i v[i] * plane(i, j)), plane in {+1, -1} — one
     // codegen'd pass over the vector ([[graft.functions.HyperplaneLshBits]])
@@ -1554,7 +1539,6 @@ object Similarity {
     * transpose shape [[kmeansCentroids]] trains with. */
   def labelOutliers(spark: SparkSession, dir: String, k: Int = 3)
       : DataFrame = {
-    VectorOps.register(spark)
     val emb = withVec(graft.Tables.load(spark, dir, "embeddings"))
     val dims = emb.select(col("label"),
         posexplode(col("v")).as(Seq("d", "x")))
@@ -1624,7 +1608,6 @@ object Similarity {
     * Everything after the one |corpus|·dim transpose aggregate is
     * |labels|-sized. */
   def centroidShift(spark: SparkSession, dir: String): DataFrame = {
-    VectorOps.register(spark)
     val emb = withVec(graft.Tables.load(spark, dir, "embeddings"))
     val dims = emb.select(col("label"), pmod(col("vec_id"), lit(2)).as("half"),
         posexplode(col("v")).as(Seq("d", "x")))
@@ -1689,7 +1672,6 @@ object Similarity {
     * (its single bucket), so no dedup pass is needed. */
   def annLshMultiprobe(spark: SparkSession, dir: String, nQueries: Int = 10,
       k: Int = 3, nBits: Int = 8): DataFrame = {
-    VectorOps.register(spark)
     val emb = withVec(graft.Tables.load(spark, dir, "embeddings"))
     val bucketed = emb.withColumn("bucket", expr(s"lsh_bits(v, $nBits)"))
     val probes = array(col("bucket") +:
@@ -1807,7 +1789,6 @@ object Similarity {
     * connected-components resolution like every other pair source). */
   def semanticDup(spark: SparkSession, dir: String, nCells: Int = 0,
       trainIters: Int = 2, threshold: Double = 0.35): DataFrame = {
-    VectorOps.register(spark)
     val emb = withVec(graft.Tables.load(spark, dir, "embeddings"))
       .select(col("vec_id"), col("v"), col("norm"))
     val dim = embDim(spark, dir, emb)
@@ -1885,7 +1866,6 @@ object Similarity {
     * set is engine-identical. */
   def rangeSearch(spark: SparkSession, dir: String, nQueries: Int = 5,
       minCos: Double = 0.2): DataFrame = {
-    VectorOps.register(spark)
     val emb = withVec(graft.Tables.load(spark, dir, "embeddings"))
     val q = emb.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("v").as("qv"),
@@ -1923,7 +1903,6 @@ object Similarity {
     * IEEE value (the [[rangeSearch]] discipline); the display value
     * alone is rounded. */
   def kcenterSeeds(spark: SparkSession, dir: String, k: Int = 8): DataFrame = {
-    VectorOps.register(spark)
     val emb = withVec(graft.Tables.load(spark, dir, "embeddings"))
       .select(col("vec_id"), col("v"), col("norm"))
       .localCheckpoint()
@@ -2167,7 +2146,6 @@ object Similarity {
     * from the corpus count; no cross-engine-fragile log2. */
   def knnGraph(spark: SparkSession, dir: String, k: Int = 3,
       occ: Long = 128L): DataFrame = {
-    VectorOps.register(spark)
     val emb = withVec(graft.Tables.load(spark, dir, "embeddings"))
     val mod = math.min(math.max((embCount(spark, dir, emb) + occ - 1) / occ, 1L), 4096L)
     val b = emb.withColumn("bucket", expr(s"lsh_bits(v, 12) % $mod"))
@@ -2234,7 +2212,6 @@ object Similarity {
     * because its 10 fixed queries are never the isolated nodes. */
   def knnGraphRecall(spark: SparkSession, dir: String, k: Int = 3,
       occ: Long = 128L, budget: Long = 50L): DataFrame = {
-    VectorOps.register(spark)
     val emb = withVec(graft.Tables.load(spark, dir, "embeddings"))
     val mod = math.max((embCount(spark, dir, emb) + budget - 1) / budget, 1L)
     val q = emb.filter(col("vec_id") % mod === 0)
@@ -2399,7 +2376,6 @@ object Similarity {
     * output ≤ ~20 rows at any scale. */
   def int8OrderFlips(spark: SparkSession, dir: String, occ: Long = 128L)
       : DataFrame = {
-    VectorOps.register(spark)
     val g = knnGraph(spark, dir, k = 2, occ = occ)
     val piv = g.groupBy("q_id")
       .agg(max(when(col("rnk") === 1, col("cos_sim"))).as("c1"),
@@ -2498,7 +2474,6 @@ object Similarity {
     * eigenvalue estimate `‖w‖/n`. */
   def pcaPower(spark: SparkSession, dir: String, iters: Int = 3)
       : DataFrame = {
-    VectorOps.register(spark)
     // r18 (guide §5): the vector projection feeds one scan per round
     // plus the count — pin it once per invocation (projected to the one
     // column the rounds read, so withVec's unused `norm` is not
@@ -2600,7 +2575,6 @@ object Similarity {
     * reducer), and only `k` rows see the final rank window. */
   def oodTopK(spark: SparkSession, dir: String, k: Int = 16,
       kc: Int = 8, iters: Int = 2): DataFrame = {
-    VectorOps.register(spark)
     val emb = withVec(graft.Tables.load(spark, dir, "embeddings"))
     val cents = trainKmeansCached(spark, dir, emb, kc, iters, 64)
     val scores = array(cents.map { case (_, c) =>
@@ -2652,7 +2626,6 @@ object Similarity {
     * literal projection — one codegen'd scan, |cells| output rows. */
   def clusterRadius(spark: SparkSession, dir: String, kc: Int = 8,
       iters: Int = 2): DataFrame = {
-    VectorOps.register(spark)
     val emb = withVec(graft.Tables.load(spark, dir, "embeddings"))
     val cents = trainKmeansCached(spark, dir, emb, kc, iters, 64)
     val scores = array(cents.map { case (_, c) =>
@@ -2716,7 +2689,6 @@ object Similarity {
     * shuffle before the m-row aggregate). */
   def pqDistortion(spark: SparkSession, dir: String, m: Int = 8,
       k: Int = 16, trainIters: Int = 2): DataFrame = {
-    VectorOps.register(spark)
     val emb = graft.Tables.load(spark, dir, "embeddings")
       .withColumn("v", col("embedding").cast("array<double>"))
     val dim = embDim(spark, dir, emb)
@@ -2804,7 +2776,6 @@ object Similarity {
     * One corpus scan, |cells| rows out. */
   def silhouette(spark: SparkSession, dir: String, kc: Int = 8,
       iters: Int = 2): DataFrame = {
-    VectorOps.register(spark)
     val emb = withVec(graft.Tables.load(spark, dir, "embeddings"))
     val cents = trainKmeansCached(spark, dir, emb, kc, iters, 64)
     require(cents.length >= 2, "silhouette needs at least 2 live cells")
@@ -2974,7 +2945,6 @@ object Similarity {
     * broadcast-assignment scan plus a cell-keyed rank. */
   def diversitySample(spark: SparkSession, dir: String, k: Int = 8,
       iters: Int = 2, budget: Long = 64L): DataFrame = {
-    VectorOps.register(spark)
     val emb = graft.Tables.load(spark, dir, "embeddings")
       .withColumn("v", col("embedding").cast("array<double>"))
     val cents = trainKmeansCached(spark, dir, emb, k, iters, 64)
@@ -3025,7 +2995,6 @@ object Similarity {
     * scale/floor are shared expressions, so bucketing is
     * engine-identical. One codegen'd scan, ≤ 31 rows out. */
   def normHist(spark: SparkSession, dir: String): DataFrame = {
-    VectorOps.register(spark)
     withVec(graft.Tables.load(spark, dir, "embeddings"))
       .withColumn("bkt",
         expr("least(CAST(floor(norm * 10) AS BIGINT), 30)"))
@@ -3152,7 +3121,6 @@ object Similarity {
     * `round(·,6)` is display-only. */
   def mmrSelect(spark: SparkSession, dir: String, poolN: Int = 50,
       k: Int = 5, lam: Double = 0.7): DataFrame = {
-    VectorOps.register(spark)
     import spark.implicits._
     val emb = withVec(graft.Tables.load(spark, dir, "embeddings"))
     val q = emb.filter(col("vec_id") === 0)
@@ -3292,7 +3260,6 @@ object Similarity {
     * feedback-sized. */
   def prfExpand(spark: SparkSession, dir: String, nFb: Int = 5,
       k: Int = 10): DataFrame = {
-    VectorOps.register(spark)
     val emb = withVec(graft.Tables.load(spark, dir, "embeddings"))
     val q = emb.filter(col("vec_id") === 0)
       .select(col("v").as("qv"), col("norm").as("qn"))
@@ -3376,7 +3343,6 @@ object Similarity {
     * everything else is map-side. */
   def centroidAuc(spark: SparkSession, dir: String,
       posLabel: Int = 0): DataFrame = {
-    VectorOps.register(spark)
     val emb = withVec(graft.Tables.load(spark, dir, "embeddings"))
     val centroid = emb.filter(col("label") === posLabel)
       .select(posexplode(col("v")).as(Seq("d", "x")))

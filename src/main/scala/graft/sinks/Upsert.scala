@@ -545,21 +545,26 @@ object Upsert {
       s"bucketBy ${manifest.bucketBy} must be a subset of merge keys $keys")
     val next = cur.getOrElse(-1L) + 1
 
+    // `_seq` keeps the batch's own row order, so of two same-key rows in
+    // one batch the later wins. Stamped before persist so the ids stay
+    // fixed; never written to the table.
     val inc = batch
       .withColumn("_gen", lit(batchId + 1))
+      .withColumn("_seq", monotonically_increasing_id())
       .withColumn("_bucket",
         pmod(xxhash64(manifest.bucketBy.map(col): _*),
           lit(manifest.nBuckets)).cast("int"))
       .persist()
     // Schema EVOLUTION ledger: the physical-file schema this batch
-    // implies (its columns + _gen; _bucket is a directory key and the
-    // tombstone marker is never persisted), unioned into the table's
-    // recorded schema — new columns append, shared names must keep
+    // implies (its columns + _gen; _bucket is a directory key, and _seq
+    // and the tombstone marker are never persisted), unioned into the
+    // table's recorded schema — new columns append, shared names must keep
     // their type (loud), and everything is nullable because older
     // generations won't physically contain the new columns.
     import org.apache.spark.sql.types.StructType
     val incFile = StructType(inc.schema.fields
-      .filterNot(f => f.name == "_bucket" || tombstoneCol.contains(f.name))
+      .filterNot(f => f.name == "_bucket" || f.name == "_seq" ||
+        tombstoneCol.contains(f.name))
       .map(_.copy(nullable = true)))
     // The ledger starts at table CREATION; tables born before it (no
     // recorded schema on an existing manifest) keep the legacy
@@ -597,7 +602,7 @@ object Upsert {
     // is recomputed from the bucketing columns, which the rows carry.
     val existingPaths = touched.toSeq
       .flatMap(b => manifest.buckets.get(b).map(g => s"$root/$g/_bucket=$b"))
-    val winners =
+    val candidates =
       if (existingPaths.isEmpty) inc
       else {
         // stored rows read with the UNIFIED schema when the table has a
@@ -614,10 +619,11 @@ object Upsert {
             pmod(xxhash64(manifest.bucketBy.map(col): _*),
               lit(manifest.nBuckets)).cast("int"))
         // stored rows never carry the tombstone marker — they are live
-        // by definition; only the incoming batch can delete
+        // by definition; only the incoming batch can delete. Their
+        // `_seq` sits below every batch row's, so on a `_gen` tie (a
+        // replayed batch) the batch still wins.
         val existing2 = tombstoneCol.fold(existing)(tc =>
-          existing.withColumn(tc, lit(false)))
-        val w = Window.partitionBy(keys.map(col): _*).orderBy(col("_gen").desc)
+          existing.withColumn(tc, lit(false))).withColumn("_seq", lit(-1L))
         // allowMissingColumns (ledgered tables only): the evolution
         // contract in-plan — a batch may add columns (existing rows
         // fill NULL) or omit columns the table already has (its rows
@@ -626,18 +632,22 @@ object Upsert {
         // Cassandra unset-column analog). Legacy tables keep the
         // strict union: schema drift stays a loud error there.
         existing2.unionByName(inc, allowMissingColumns = ledger.isDefined)
-          .withColumn("_rank", row_number().over(w))
-          .filter(col("_rank") === 1)
-          .drop("_rank")
       }
+    // one shuffle on the bucket key: each write task holds exactly one
+    // bucket, so each bucket dir gets one file. The key window partitions
+    // by (_bucket +: keys), which that hash partitioning already clusters,
+    // so ranking adds no second exchange.
+    val w = Window.partitionBy((col("_bucket") +: keys.map(col)): _*)
+      .orderBy(col("_gen").desc, col("_seq").desc)
+    val winners = candidates
+      .repartition(math.max(touched.length, 1), col("_bucket"))
+      .withColumn("_rank", row_number().over(w))
+      .filter(col("_rank") === 1)
+      .drop("_rank", "_seq")
     // a key whose winning row is a tombstone leaves the table
     val merged = tombstoneCol.fold(winners)(tc =>
       winners.filter(!coalesce(col(tc), lit(false))).drop(tc))
-    // one shuffle on the bucket key: each write task holds exactly one
-    // bucket, so each bucket dir gets one file
-    merged
-      .repartition(math.max(touched.length, 1), col("_bucket"))
-      .write.mode("overwrite").partitionBy("_bucket")
+    merged.write.mode("overwrite").partitionBy("_bucket")
       .parquet(s"$root/gen$next")
     // With deletes, a touched bucket can come out EMPTY (its last rows
     // tombstoned): partitionBy emits no dir for it, so pointing the

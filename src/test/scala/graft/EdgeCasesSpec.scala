@@ -222,6 +222,31 @@ class EdgeCasesSpec extends SparkSuite {
     assert(Upsert.readKey(spark, root, Seq(7L)).get.count() === 1)
   }
 
+  test("upsert: the later of two same-key rows in one batch wins") {
+    import spark.implicits._
+    import graft.sinks.Upsert
+    val root = tmpDir("graft-upsert-last")
+    def st: Set[(String, Double)] = Upsert.read(spark, root).get.collect()
+      .map(r => (r.getAs[String]("k"), r.getAs[Double]("v"))).toSet
+    // fresh table: the touched bucket has no stored rows
+    Upsert.merge(Seq(("a", 1.0), ("a", 2.0), ("b", 1.0)).toDF("k", "v"),
+      0, root, Seq("k"))
+    assert(st === Set(("a", 2.0), ("b", 1.0)))
+    // existing bucket: both rows supersede the stored one, the later wins
+    Upsert.merge(Seq(("a", 4.0), ("a", 3.0)).toDF("k", "v"), 1, root, Seq("k"))
+    assert(st === Set(("a", 3.0), ("b", 1.0)))
+  }
+
+  test("query selection: SPARK_GRAFT_ONLY names must all be registered") {
+    assert(SparkEntry.selected(Some("a9_time_bounds, a1_tumbling_volume")) ===
+      Seq("a1_tumbling_volume", "a9_time_bounds"))
+    assert(SparkEntry.selected(None) === SparkEntry.queries.keys.toSeq.sorted)
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.selected(Some("a1_tumbling_volume,a1_tumbling_volme")))
+    assert(e.getMessage.contains("a1_tumbling_volme"))
+    intercept[IllegalArgumentException](SparkEntry.selected(Some(" , ")))
+  }
+
   test("indicator tier survives an empty table") {
     assert(TradeOps.bollinger(emptyTrades).count() === 0)
     assert(TradeOps.rsi(emptyTrades).count() === 0)

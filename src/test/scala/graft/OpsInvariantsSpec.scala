@@ -689,8 +689,7 @@ class OpsInvariantsSpec extends SparkSuite {
     out.unpersist()
   }
 
-  test("graft functions are SQL-callable after registration") {
-    GraftExtensions.registerAll(spark)
+  test("graft functions are SQL-callable in the driver session") {
     val r = spark.sql(
       "SELECT dot_product(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d, " +
         "lsh_bits(array(1.0D, -2.0D, 0.5D), 8) AS b").head
@@ -699,7 +698,6 @@ class OpsInvariantsSpec extends SparkSuite {
   }
 
   test("avro codec round-trips the c union field (null, [null, str] cases)") {
-    graft.functions.AvroCodec.register(spark)
     val df = spark.sql(
       """SELECT named_struct(
         |  'data', array(

@@ -23,13 +23,8 @@ case class PropDoc(doc_id: Long, text: String)
   */
 object PropertiesSpec extends Properties("graft") {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-props")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession =
+    SparkEntry.session(cpus = 4, shufflePartitions = 4)
 
   private val t0 = 1700000000000L
 

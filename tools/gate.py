@@ -14,11 +14,12 @@ Phases
   stress_rel    full-registry Verify on the money-magnitude relational
                 corpus (tools/make_stress.py relational), every query
                 classified PASS / LOUD-BOTH / EMPTY-OK / ASYMMETRIC /
-                VALUE-FAIL — this is tools/money_gate.py's
-                classification applied to the WHOLE registry, so it
-                subsumes the money sweep (every DECIMAL(18,6) oracle is
-                in the registry) AND the loud-symmetry triage that
-                caught w_kyle_lambda in r14
+                VALUE-FAIL (classify_stress). It judges the WHOLE
+                registry, a superset of the DECIMAL(18,6) money queries,
+                so it is the money-magnitude sweep (exact match, both
+                engines loud, or both empty passes; one-sided errors
+                and value mismatches fail) AND the loud-symmetry triage
+                that caught w_kyle_lambda in r14
   stress_dense  same on the dense (row-replicated events) corpus
 
 Disposition is GREEN iff: zero sf0.01/sf0.1 hash failures, the type
@@ -83,7 +84,8 @@ def snapshot_jar(workdir):
 
 
 def run_verify(jar, sf_dir, out_dir, cpus, shuffle, extra_env=None):
-    env = {"SPARK_GRAFT_CPUS": str(cpus), "SPARK_GRAFT_SHUFFLE": str(shuffle)}
+    env = {"SPARK_GRAFT_CPUS": str(cpus),
+           "SPARK_GRAFT_SHUFFLE_PARTITIONS": str(shuffle)}
     if extra_env:
         env.update(extra_env)
     sh([SPARK_SUBMIT, "--driver-memory", "48g", "--class", "graft.Verify",
@@ -121,7 +123,7 @@ def normalize(df):
 
 
 def classify_stress(tag, sf_dir, out_dir, spark_failed, oracle):
-    """money_gate.py's per-query verdict, registry-wide."""
+    """Per-query stress verdict over the whole registry."""
     con = duckdb.connect()
     if os.environ.get("DUCKDB_MEM"):
         con.sql(f"SET memory_limit='{os.environ['DUCKDB_MEM']}'")
